@@ -11,7 +11,10 @@ Two CC implementations:
 - ``alternating_star`` — large-star/small-star (Kiveris et al., "Connected
   Components in MapReduce and Beyond", SoCC'14): O(log² n) rounds regardless
   of diameter; the scale path the north rule mandates for 10^12-turn graphs
-  where a single adversarial chain would stall hash-min.
+  where a single adversarial chain would stall hash-min. A graph of at most
+  ``_STAR_CONTRACT_MAX_EDGES`` canonical edges is first contracted by one
+  ``mapInArrow`` task running a vectorized numpy union-find, which hands the
+  loop a star forest: the loop then converges in a single round.
 
 Both run as driver-controlled DataFrame loops with ``localCheckpoint()`` to
 truncate lineage (the reference's table-swap per iteration,
@@ -34,6 +37,7 @@ from __future__ import annotations
 import time
 from dataclasses import dataclass, field
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -48,9 +52,14 @@ class CCResult:
     # bounded driver union-find fast path: "hash_min" | "star" |
     # "hash_min+star" (probe escalated) | "local_union_find"
     path: str = "distributed"
-    # per materialized round: {"sec": wall, "delta": labels changed} — the
-    # scaling decomposition the bench publishes (empty for non-loop paths)
+    # per materialized round — hash-min: {"sec": wall, "delta": labels
+    # changed}; star: {"sec": wall, "pairs": forest pairs after the round} —
+    # the scaling decomposition the bench publishes (empty for non-loop paths)
     rounds: list = field(default_factory=list)
+    # star's union-find pre-pass: {"sec", "edges_in" (canonical edges),
+    # "pairs_out"} (empty when it did not run: another path, or a graph
+    # above _STAR_CONTRACT_MAX_EDGES)
+    contraction: dict = field(default_factory=dict)
 
 
 def impacted_nodes(edges_new: DataFrame) -> DataFrame:
@@ -164,6 +173,16 @@ def _undirected(edges: DataFrame) -> DataFrame:
     # fall back to shuffles, which is the only shape that works there.
 _CC_BROADCAST_MAX_NODES = 4_000_000
 
+# star pre-pass cap: a canonical edge list this small is union-found in ONE
+# Python task (coalesce(1) + mapInArrow) before the star loop. The kernel
+# holds ~100 B per edge (measured peak: +101 MB at 1M edges, +405 MB at 4M;
+# ~1 s per 1M edges on one core), so the cap bounds the worker's memory,
+# which sits outside Spark's memory manager. Larger graphs run the loop on
+# the canonical edges: a kernel per partition of a many-partition edge list
+# leaves the cross-partition structure to the loop, which then takes as
+# many rounds as without it (measured 9-10 at 4-32 partitions).
+_STAR_CONTRACT_MAX_EDGES = 1_000_000
+
 
 def _with_long_ids(algo_fn, nodes: DataFrame, edges: DataFrame, **kw) -> CCResult:
     """Run a CC loop on dense LONG node ids, then restore string semantics.
@@ -232,7 +251,7 @@ def _with_long_ids_inner(algo_fn, nodes: DataFrame, edges: DataFrame, **kw) -> C
     reps = with_keys.groupBy("lid").agg(F.min("entity_key").alias("label"))
     labels = with_keys.join(reps.hint("shuffle_hash"), "lid").select("entity_key", "label")
     return CCResult(labels=labels, iterations=res.iterations, converged=res.converged,
-                    path=res.path, rounds=res.rounds)
+                    path=res.path, rounds=res.rounds, contraction=res.contraction)
 
 
 def _hash_min_lp_long(
@@ -418,6 +437,55 @@ def hash_min_lp(
     )
 
 
+def _union_find_pairs(left: np.ndarray, right: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Vectorized union-find over one edge list: (node, component min) for
+    every node that is not its component's minimum.
+
+    Min-hooking plus pointer jumping on dense indices into the sorted node
+    ids, so index order IS id order. Every pointer goes to a smaller index,
+    so the forest stays acyclic and each root is its component's minimum.
+    Each pass hooks every root that touches a smaller root across an edge
+    onto the smallest such root (``np.minimum.at`` — duplicates resolve to
+    the minimum), then jumps pointers until every node points straight at a
+    root. The root count falls every pass. The output has the input's
+    components and one pair per non-root node, so never more pairs than
+    distinct non-self-loop edges (a spanning forest)."""
+    ids, inv = np.unique(np.concatenate([left, right]), return_inverse=True)
+    a, b = inv[: len(left)], inv[len(left):]
+    parent = np.arange(len(ids))
+    while True:
+        pa, pb = parent[a], parent[b]
+        live = pa != pb
+        if not live.any():
+            break
+        pa, pb = pa[live], pb[live]
+        np.minimum.at(parent, np.maximum(pa, pb), np.minimum(pa, pb))
+        while True:
+            grand = parent[parent]
+            if np.array_equal(grand, parent):
+                break
+            parent = grand
+    child = np.flatnonzero(parent != np.arange(len(ids)))
+    return ids[child], ids[parent[child]]
+
+
+def _contract_partition(batches):
+    """mapInArrow body: one union-find over a whole edge partition, emitted
+    as (u=node, v=component min) star pairs. The caller bounds the partition
+    at ``_STAR_CONTRACT_MAX_EDGES`` rows."""
+    import pyarrow as pa
+
+    left, right = [], []
+    for rb in batches:
+        left.append(rb.column(0).to_numpy(zero_copy_only=False))
+        right.append(rb.column(1).to_numpy(zero_copy_only=False))
+    if not left:
+        return
+    u, v = _union_find_pairs(np.concatenate(left), np.concatenate(right))
+    if len(u):
+        yield pa.RecordBatch.from_arrays([pa.array(u), pa.array(v)], names=["u", "v"])
+
+
 def _alternating_star_long(
     nodes: DataFrame, edges: DataFrame, max_iters: int, checkpoint_every: int
 ) -> CCResult:
@@ -442,7 +510,7 @@ def _alternating_star_long(
         mins = nbrs.groupBy("src").agg(F.least(F.min("dst"), F.first("src")).alias("m"))
         return nbrs.join(mins.hint("shuffle_hash"), "src")
 
-    def _signature(df: DataFrame):
+    def _signature():
         """(count, order-insensitive content hash) — set-equality fingerprint;
         one Observation, no extra jobs. Collision-stopping-early risk ~2^-64."""
         return [
@@ -450,12 +518,32 @@ def _alternating_star_long(
             F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")).alias("h"),
         ]
 
-    pairs = _canon(edges, "left_nid", "right_nid").localCheckpoint(eager=True)
-    prev_sig = None
+    # the input's signature rides on the checkpoint that materializes it, so
+    # a first round that changes nothing converges at iteration 1
+    obs_in = Observation("star_input")
+    pairs = _canon(edges, "left_nid", "right_nid").observe(obs_in, *_signature()).localCheckpoint(eager=True)
+    prev_sig = (obs_in.get["n"], obs_in.get["h"])
+    contraction: dict = {}
+    if prev_sig[0] <= _STAR_CONTRACT_MAX_EDGES:
+        # pre-pass: one union-find over the whole (bounded) edge list in one
+        # task; the star forest it emits is already the loop's fixed point
+        t_pre = time.time()
+        obs_c = Observation("star_contracted")
+        pairs = (
+            pairs.coalesce(1)
+            .mapInArrow(_contract_partition, "u long, v long")
+            .observe(obs_c, *_signature())
+            .localCheckpoint(eager=True)
+        )
+        contraction = {"sec": round(time.time() - t_pre, 3), "edges_in": int(prev_sig[0]),
+                       "pairs_out": int(obs_c.get["n"])}
+        prev_sig = (obs_c.get["n"], obs_c.get["h"])
     iterations = 0
     converged = False
+    rounds: list[dict] = []
     step = max(1, checkpoint_every)
     for i in range(max_iters):
+        t_round = time.time()
         iterations = i + 1
         # ---- large-star(u): emit (v, m(u)) for strictly larger neighbors v>u
         lg = _with_min(_nbrs(pairs)).filter(F.col("dst") > F.col("src"))
@@ -479,9 +567,10 @@ def _alternating_star_long(
             pairs = small.localCheckpoint(eager=False)
             continue
         obs = Observation(f"star_{i}")
-        small = small.observe(obs, *_signature(small)).localCheckpoint(eager=True)
+        small = small.observe(obs, *_signature()).localCheckpoint(eager=True)
         sig = (obs.get["n"], obs.get["h"])
         pairs = small
+        rounds.append({"sec": round(time.time() - t_round, 3), "pairs": int(sig[0])})
         if sig == prev_sig:
             converged = True
             break
@@ -493,7 +582,8 @@ def _alternating_star_long(
             "left",
         ).select("nid", F.coalesce("lid", "nid").alias("lid"))
     )
-    return CCResult(labels=labels, iterations=iterations, converged=converged, path="star")
+    return CCResult(labels=labels, iterations=iterations, converged=converged, path="star",
+                    rounds=rounds, contraction=contraction)
 
 
 def alternating_star(
@@ -513,7 +603,18 @@ def alternating_star(
     shuffle-friendly and skew-handled by AQE. Iterates on dense LONG ids
     (``_with_long_ids``): label order during the loop is arbitrary, and the
     final one-shot remap restores resolved_id = MIN(entity_key) string
-    semantics (sql/common/40:2)."""
+    semantics (sql/common/40:2).
+
+    A graph of at most ``_STAR_CONTRACT_MAX_EDGES`` canonical edges starts
+    the loop from a contracted forest: one ``mapInArrow`` task runs
+    ``_union_find_pairs`` over the whole edge list and emits (node,
+    component min) pairs — the same components, at most one pair per edge.
+    The forest's (count, hash) signature is observed on the checkpoint that
+    materializes it, so the first round reproduces its input and the loop
+    stops at iteration 1. Larger graphs run the loop on the canonical edges,
+    whose signature is observed the same way. ``CCResult.contraction``
+    records the pre-pass's edges in and pairs out (empty when it did not
+    run), ``CCResult.rounds`` each round's pair count."""
     return _with_long_ids(
         _alternating_star_long, nodes, edges, max_iters=max_iters, checkpoint_every=checkpoint_every
     )
@@ -537,14 +638,19 @@ def _local_union_find(nodes: DataFrame, edges: DataFrame, max_edges: int) -> CCR
     node_cap = 2 * max_edges + 10_000  # isolated singletons beyond endpoints
     # the two limit-guarded collects are independent jobs — overlap them from
     # a 2-thread pool so the node scan back-fills the edge job's tail (guide
-    # §2.6); each is Arrow-batched and bounded as before
+    # §2.6); each is Arrow-batched and bounded as before. Pool threads do not
+    # see the caller's Spark local properties, so each callable is wrapped to
+    # carry them: the collects' jobs land in the caller's job group (stage).
     from concurrent.futures import ThreadPoolExecutor
 
+    from pyspark import inheritable_thread_target
+
+    inherit = inheritable_thread_target(nodes.sparkSession)
     with ThreadPoolExecutor(max_workers=2) as ex:
-        f_e = ex.submit(
+        f_e = ex.submit(inherit(
             lambda: edges.select("left_entity_key", "right_entity_key").limit(max_edges + 1).toPandas()
-        )
-        f_n = ex.submit(lambda: nodes.select("entity_key").limit(node_cap + 1).toPandas())
+        ))
+        f_n = ex.submit(inherit(lambda: nodes.select("entity_key").limit(node_cap + 1).toPandas()))
         e, n = f_e.result(), f_n.result()
     if len(e) > max_edges:
         return None
@@ -672,6 +778,8 @@ def connected_components(
                 iterations=probe.iterations + star.iterations,
                 converged=star.converged,
                 path="hash_min+star",
+                rounds=probe.rounds + star.rounds,
+                contraction=star.contraction,
             )
     if algorithm == "star":
         return alternating_star(nodes, edges, max_iters=max(max_iters, 50), checkpoint_every=checkpoint_every)

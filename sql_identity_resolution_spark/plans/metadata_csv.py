@@ -39,9 +39,11 @@ from sql_identity_resolution_spark.config import (
 _STRATEGY_MAP = {"SOURCE_PRIORITY": "TRUST_RECENCY", "MOST_RECENT": "MOST_RECENT"}
 
 
-def _read(dir_path: str, name: str) -> list[dict]:
+def _read(dir_path: str, name: str, required: bool = False) -> list[dict]:
     p = os.path.join(dir_path, f"{name}.csv")
     if not os.path.exists(p):
+        if required:
+            raise FileNotFoundError(f"metadata bundle is missing {p}")
         return []
     with open(p, newline="") as f:
         return list(csv.DictReader(f))
@@ -64,7 +66,13 @@ def load_metadata_csv(
     readers: Optional[dict[str, Callable[[SparkSession], DataFrame]]] = None,
     **engine_kwargs,
 ) -> EngineConfig:
-    """Build an EngineConfig from a reference-format metadata CSV directory."""
+    """Build an EngineConfig from a reference-format metadata CSV directory.
+
+    Raises ``FileNotFoundError`` when the directory or its ``rule.csv`` is
+    missing: a bundle without rules would otherwise load as an empty config.
+    The other files are optional."""
+    if not os.path.isdir(dir_path):
+        raise FileNotFoundError(f"metadata bundle directory not found: {dir_path}")
     paths = paths or {}
     readers = readers or {}
 
@@ -96,7 +104,7 @@ def load_metadata_csv(
             require_non_null=_b(r.get("require_non_null")),
             max_group_size=_i(r.get("max_group_size"), 10_000),
         )
-        for r in _read(dir_path, "rule")
+        for r in _read(dir_path, "rule", required=True)
     ]
 
     mappings = [

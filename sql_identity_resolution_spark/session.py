@@ -43,6 +43,32 @@ def _warm_python_workers(spark: SparkSession, n_workers: int) -> None:
         pass  # session stopped mid-warmup or noop source unavailable
 
 
+def _resolve_master(master: str | None) -> str:
+    """The master the session runs on: the caller's; else the one a launcher
+    submitted (``--master`` in ``PYSPARK_SUBMIT_ARGS``, or the conf of the
+    spark-submit JVM this process was started from); else
+    ``local[$SPARK_GRAFT_CPUS]`` (or ``local[*]``). ``build_session``'s
+    local-only settings key off the result, so a submitted cluster master
+    never gets them."""
+    if master:
+        return master
+    args = os.environ.get("PYSPARK_SUBMIT_ARGS", "").split()
+    for i, arg in enumerate(args):
+        if arg == "--master" and i + 1 < len(args):
+            return args[i + 1]
+        if arg.startswith("--master="):
+            return arg.split("=", 1)[1]
+    if os.environ.get("PYSPARK_GATEWAY_PORT"):
+        # started by spark-submit: its JVM already holds the submitted conf
+        from pyspark import SparkConf, SparkContext
+
+        SparkContext._ensure_initialized()
+        submitted = SparkConf().get("spark.master", None)
+        if submitted:
+            return submitted
+    return f"local[{os.environ.get('SPARK_GRAFT_CPUS', '*')}]"
+
+
 def build_session(
     app_name: str = "sql_identity_resolution_spark",
     master: str | None = None,
@@ -51,13 +77,12 @@ def build_session(
 ) -> SparkSession:
     """Build (or get) a SparkSession with the engine's defaults.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (or ``local[*]``) in the
-    sandbox; on a real cluster pass ``None`` master via spark-submit and these
-    settings become cluster-side defaults.
+    ``master=None`` takes the master spark-submit was given and otherwise
+    defaults to ``local[$SPARK_GRAFT_CPUS]`` (or ``local[*]``); on a real
+    cluster pass ``None`` via spark-submit and these settings become
+    cluster-side defaults (see ``_resolve_master``).
     """
-    if master is None:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
-        master = f"local[{cpus}]"
+    master = _resolve_master(master)
     if shuffle_partitions is None:
         # local mode: ~cores, not the 200 default (right-sized for tests);
         # cluster mode: leave to AQE coalescing from a higher initial value.
@@ -89,17 +114,6 @@ def build_session(
         .config(
             "spark.sql.adaptive.coalescePartitions.minPartitionSize",
             os.environ.get("SPARK_GRAFT_AQE_MIN_PARTITION", "64k"),
-        )
-        # reading a bucketed store passes one path per bucket; above this
-        # path count Spark runs a DISTRIBUTED file-listing job — one task per
-        # path, ~0 compute, ~0.5 s of pure task scheduling per 256-bucket
-        # read (measured; several reads per INCR run). Driver-side listing of
-        # direct-filesystem paths is microseconds, so lift the threshold;
-        # object-store deployments with wider tables can lower it back via
-        # env (distributed listing pays off when a LIST call is a slow RPC).
-        .config(
-            "spark.sql.sources.parallelPartitionDiscovery.threshold",
-            os.environ.get("SPARK_GRAFT_LIST_THRESHOLD", "4096"),
         )
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
@@ -134,6 +148,18 @@ def build_session(
     if master.startswith("local") and os.environ.get("SPARK_GRAFT_RAW_LOCAL_FS", "1") != "0":
         builder = builder.config(
             "spark.hadoop.fs.file.impl", "org.apache.hadoop.fs.RawLocalFileSystem"
+        )
+    # local masters: reading a bucketed store passes one path per bucket;
+    # above this path count Spark runs a DISTRIBUTED file-listing job — one
+    # task per path, ~0 compute, ~0.5 s of pure task scheduling per
+    # 256-bucket read (measured; several reads per INCR run). Driver-side
+    # listing of direct-filesystem paths is microseconds, so lift the
+    # threshold. Cluster masters keep Spark's default: on an object store a
+    # LIST call is a slow RPC and distributed listing pays off.
+    if master.startswith("local"):
+        builder = builder.config(
+            "spark.sql.sources.parallelPartitionDiscovery.threshold",
+            os.environ.get("SPARK_GRAFT_LIST_THRESHOLD", "4096"),
         )
     # ad-hoc conf injection for experiments/deployments without code changes:
     # SPARK_GRAFT_EXTRA_CONF="spark.foo=1;spark.bar=2"

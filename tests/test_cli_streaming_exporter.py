@@ -90,11 +90,73 @@ def test_dashboard_generation(spark, crm, tmp_path):
         assert section in page
 
 
+# a metadata bundle in the reference's metadata_samples/*.csv shape: five
+# source tables, three rules, 13 identifier mappings, five trust rows and a
+# survivorship rule per attribute
+_REFERENCE_BUNDLE = {
+    "source_table": """table_id,table_fqn,entity_type,entity_key_expr,watermark_column,watermark_lookback_minutes,is_active
+customer,crm.customer,PERSON,customer_id,rec_update_dt,0,true
+transactions,sales.transactions,PERSON,transaction_id,load_ts,0,true
+web_events,digital.web_events,PERSON,event_id,event_ts,60,true
+loyalty_accounts,loyalty.loyalty_accounts,PERSON,loyalty_account_id,updated_at,0,true
+store_visits,retail.store_visits,PERSON,visit_id,visit_ts,0,true
+""",
+    "rule": """rule_id,rule_name,is_active,priority,identifier_type,canonicalize,allow_hashed,require_non_null,max_group_size
+R_EMAIL_EXACT,Email exact match,true,1,EMAIL,LOWERCASE,true,true,10000
+R_PHONE_EXACT,Phone exact match,true,2,PHONE,NONE,true,true,10000
+R_LOYALTY_EXACT,Loyalty id exact match,true,3,LOYALTY_ID,NONE,true,true,10000
+""",
+    "identifier_mapping": """table_id,identifier_type,identifier_value_expr,is_hashed
+customer,EMAIL,email,false
+customer,PHONE,phone,false
+customer,LOYALTY_ID,loyalty_id,false
+transactions,EMAIL,customer_email,false
+transactions,PHONE,customer_phone,false
+web_events,EMAIL,email,false
+web_events,PHONE,phone,false
+loyalty_accounts,EMAIL,email,false
+loyalty_accounts,PHONE,phone,false
+loyalty_accounts,LOYALTY_ID,loyalty_id,false
+store_visits,EMAIL,email,false
+store_visits,PHONE,phone,false
+store_visits,LOYALTY_ID,loyalty_id,false
+""",
+    "source": """table_id,source_name,trust_rank,is_active
+customer,CRM,1,true
+loyalty_accounts,Loyalty,2,true
+transactions,POS,3,true
+store_visits,Store,4,true
+web_events,Web,5,true
+""",
+    "entity_attribute_mapping": """table_id,attribute_name,attribute_expr
+customer,email_raw,email
+customer,phone_raw,phone
+customer,first_name,first_name
+customer,last_name,last_name
+loyalty_accounts,email_raw,email
+loyalty_accounts,phone_raw,phone
+""",
+    "survivorship_rule": """attribute_name,strategy,source_priority_list,recency_field
+email_raw,MOST_RECENT,,
+phone_raw,SOURCE_PRIORITY,"customer,loyalty_accounts",
+first_name,SOURCE_PRIORITY,customer,
+last_name,SOURCE_PRIORITY,customer,
+""",
+}
+
+
+def _write_bundle(dir_path, files):
+    dir_path.mkdir()
+    for name, text in files.items():
+        (dir_path / f"{name}.csv").write_text(text)
+    return str(dir_path)
+
+
 def test_metadata_csv_loader_reference_bundle(spark, tmp_path):
-    """Feed the reference's ACTUAL metadata_samples/*.csv into a run: two of
+    """Feed a reference-format metadata_samples/*.csv bundle into a run: two of
     the five configured source tables get synthesized parquet (the others load
     as inactive — partial-migration mode), then FULL runs end-to-end with the
-    reference's rules/mappings/attributes/trust unchanged."""
+    bundle's rules/mappings/attributes/trust unchanged."""
     from sql_identity_resolution_spark import IDRPipeline
     from sql_identity_resolution_spark.plans.metadata_csv import load_metadata_csv
 
@@ -127,7 +189,7 @@ def test_metadata_csv_loader_reference_bundle(spark, tmp_path):
         str(tmp_path / "loyalty.parquet"),
     )
     cfg = load_metadata_csv(
-        "/root/reference/metadata_samples",
+        _write_bundle(tmp_path / "metadata_samples", _REFERENCE_BUNDLE),
         warehouse=str(tmp_path / "wh"),
         paths={
             "customer": str(tmp_path / "customer.parquet"),
@@ -152,6 +214,20 @@ def test_metadata_csv_loader_reference_bundle(spark, tmp_path):
     # bridges customer 3 to the loyalty account; PHONE 333 also links them
     assert m["customer:1"] == m["customer:2"]
     assert m["customer:3"] == m["loyalty_accounts:77"]
+
+
+def test_metadata_csv_loader_missing_bundle_raises(tmp_path):
+    """A missing directory or rule.csv fails loudly, naming the path, instead
+    of loading a config with no rules."""
+    from sql_identity_resolution_spark.plans.metadata_csv import load_metadata_csv
+
+    missing = tmp_path / "absent"
+    with pytest.raises(FileNotFoundError, match=str(missing)):
+        load_metadata_csv(str(missing), warehouse=str(tmp_path / "wh"))
+    no_rules = {k: v for k, v in _REFERENCE_BUNDLE.items() if k != "rule"}
+    bundle = _write_bundle(tmp_path / "no_rules", no_rules)
+    with pytest.raises(FileNotFoundError, match="rule.csv"):
+        load_metadata_csv(bundle, warehouse=str(tmp_path / "wh"))
 
 
 def test_webhook_and_datadog_exporters(spark, crm):

@@ -231,3 +231,107 @@ def test_frontier_matches_dense_hash_min(spark):
     # per-round decomposition is recorded and the delta hits 0 at convergence
     assert front.rounds and front.rounds[-1]["delta"] == 0
     assert all(set(r) == {"sec", "delta"} for r in front.rounds)
+
+
+# ------------------------------------------------- star union-find pre-pass
+
+
+def _adversarial_rows():
+    """A 60-node chain, a 25-leaf hub star, duplicate edges (both
+    orientations) and self-loops; callers add isolated nodes."""
+    rows = [(f"c{i:03d}", f"c{i+1:03d}") for i in range(59)]
+    rows += [("hub", f"s{i:02d}") for i in range(25)]
+    rows += [("c010", "c011"), ("c011", "c010"), ("s03", "hub"), ("hub", "s03")]
+    rows += [("c020", "c020"), ("hub", "hub"), ("loop", "loop")]
+    return rows
+
+
+def test_union_find_pairs_kernel_matches_dict_union_find():
+    """The per-partition numpy kernel: same components as a dict union-find,
+    each non-root node paired with its component min, at most one pair per
+    distinct non-self-loop edge."""
+    import numpy as np
+
+    from sql_identity_resolution_spark.operators.graph import _union_find_pairs
+
+    rng = np.random.default_rng(11)
+    for _ in range(50):
+        n, m = int(rng.integers(1, 60)), int(rng.integers(0, 120))
+        left, right = rng.integers(0, n, m) * 3 + 5, rng.integers(0, n, m) * 3 + 5
+        parent: dict = {}
+
+        def find(x):
+            while parent.get(x, x) != x:
+                x = parent[x]
+            return x
+
+        for a, b in zip(left.tolist(), right.tolist()):
+            a, b = find(a), find(b)
+            if a != b:
+                parent[max(a, b)] = min(a, b)
+        want = {(x, find(x)) for x in set(left.tolist()) | set(right.tolist()) if find(x) != x}
+        u, v = _union_find_pairs(left, right)
+        assert set(zip(u.tolist(), v.tolist())) == want
+        assert len(u) <= len({(a, b) for a, b in zip(left.tolist(), right.tolist()) if a != b})
+
+
+def _adversarial_graph(spark, partitions):
+    rows = _adversarial_rows()
+    keys = sorted({k for r in rows for k in r} | {"iso1", "iso2"})
+    nodes = spark.createDataFrame([(k,) for k in keys], "entity_key string")
+    edges = spark.createDataFrame(rows, "left_entity_key string, right_entity_key string")
+    edges = edges.repartition(partitions) if partitions > 1 else edges.coalesce(1)
+    canonical = {frozenset(r) for r in rows if r[0] != r[1]}
+    return nodes, edges, canonical
+
+
+@pytest.mark.parametrize("partitions", [8, 1])
+def test_star_prepass_matches_local_union_find(spark, partitions):
+    """The contracted star loop labels an adversarial graph exactly as the
+    driver union-find does, whether its edges are spread over 8 partitions
+    or sit in one. The pre-pass leaves a star forest either way, so the loop
+    converges at its first round."""
+    from sql_identity_resolution_spark.operators.graph import _local_union_find, alternating_star
+
+    nodes, edges, canonical = _adversarial_graph(spark, partitions)
+    want = {(r["entity_key"], r["label"]) for r in _local_union_find(nodes, edges, 1000).labels.collect()}
+    res = alternating_star(nodes, edges, max_iters=40)
+    assert res.converged
+    assert {(r["entity_key"], r["label"]) for r in res.labels.collect()} == want
+    assert res.contraction["edges_in"] == len(canonical)
+    assert res.contraction["pairs_out"] <= res.contraction["edges_in"]
+    assert res.rounds and all(set(r) == {"sec", "pairs"} for r in res.rounds)
+    assert res.iterations == len(res.rounds) == 1
+    # a star forest: one pair per node that is not its component's min
+    assert res.contraction["pairs_out"] == len(want) - len({lbl for _, lbl in want})
+
+
+def test_star_above_contract_cap_skips_prepass(spark, monkeypatch):
+    """A graph above the pre-pass cap runs the star loop on its canonical
+    edges, with no pre-pass, and still converges to the component min."""
+    from sql_identity_resolution_spark.operators import graph
+
+    monkeypatch.setattr(graph, "_STAR_CONTRACT_MAX_EDGES", 0)
+    nodes, edges = _chain(spark, 3)
+    res = graph.alternating_star(nodes, edges, max_iters=40)
+    assert res.converged and res.contraction == {}
+    assert sorted((r["entity_key"], r["label"]) for r in res.labels.collect()) == [
+        ("e000", "e000"), ("e001", "e000"), ("e002", "e000")]
+    assert res.iterations == len(res.rounds) > 1
+
+
+def test_local_union_find_collects_keep_job_group(spark):
+    """The driver union-find's two collects run on pool threads; their jobs
+    must still land in the caller's job group (the pipeline's stage)."""
+    from sql_identity_resolution_spark.operators.graph import _local_union_find
+
+    nodes, edges = _chain(spark, 12)
+    sc = spark.sparkContext
+    group = "uf-collects-job-group"
+    sc.setJobGroup(group, group, False)
+    try:
+        assert _local_union_find(nodes, edges, 1000) is not None
+    finally:
+        sc.setJobGroup("", "", False)
+    # one job (at least) per limit-guarded collect; none without the fix
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) >= 2

@@ -46,3 +46,18 @@ def test_warmup_once_per_application(spark):
     before = len(S._WARMED_APPS)
     S.build_session(app_name="idr-tests", master="local[*]")  # same app via getOrCreate
     assert len(S._WARMED_APPS) == before
+
+
+def test_resolve_master_prefers_caller_then_submitted_master(monkeypatch):
+    """master=None takes a submitted master, so a cluster deployment does not
+    silently run local with the local-only settings."""
+    monkeypatch.delenv("PYSPARK_GATEWAY_PORT", raising=False)
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    monkeypatch.delenv("PYSPARK_SUBMIT_ARGS", raising=False)
+    assert S._resolve_master(None) == "local[3]"
+    assert S._resolve_master("local[5]") == "local[5]"
+    monkeypatch.setenv("PYSPARK_SUBMIT_ARGS", "--master spark://head:7077 pyspark-shell")
+    assert S._resolve_master(None) == "spark://head:7077"
+    monkeypatch.setenv("PYSPARK_SUBMIT_ARGS", "--master=yarn pyspark-shell")
+    assert S._resolve_master(None) == "yarn"
+    assert S._resolve_master("local[2]") == "local[2]"
