@@ -402,9 +402,6 @@ def scaling_worker(turns_path: str, cpus: int) -> None:
         score_broadcast_max_entities=int(
             os.environ.get("SPARK_GRAFT_BCAST_MAX", "5000000")
         ),
-        # checkpoint_every=2 (fuse 2 CC rounds/job) was tried here and showed
-        # no benefit outside the VM's noise band — left at the default 1
-        checkpoint_every=int(os.environ.get("SPARK_GRAFT_CC_FUSE", "1")),
     )
     t0 = time.time()
     res = IDRPipeline(spark, cfg).run("FULL")

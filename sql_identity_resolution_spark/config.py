@@ -172,14 +172,9 @@ class EngineConfig:
     # AND still escalates, bounded at ~2 star-rounds of extra cost, so the
     # threshold sits high; tune per workload.
     cc_star_threshold_edges: int = 100_000_000
-    # frontier (vertex-activation) hash-min: only labels that changed last
-    # round propagate — per-round shuffle cost O(frontier-incident edges)
-    # instead of O(E); exactly equivalent labels (monotone-min argument in
-    # operators/graph.py). False = the dense reference-literal form (A/B).
-    cc_frontier: bool = True
     # Small-graph fast path: when the graph to cluster fits under this many
     # edges (a bounded, Arrow-batched collect — ~40 MB of keys at the
-    # default, union-find ~1.4 s), run union-find on the driver instead of
+    # default, union-find ~1.1 s), run union-find on the driver instead of
     # paying the distributed loop's O(diameter) scheduler round-trips
     # (~10-15 s fixed floor). The gate is the MEASURED edge count (the same
     # size-adaptive principle as AQE's broadcast threshold), so corpus-scale
@@ -188,10 +183,6 @@ class EngineConfig:
     # Same labels either way, limit-guarded collect with automatic
     # distributed fallback. 0 disables.
     cc_local_max_edges: int = 500_000
-    # CC rounds fused per Spark job: materialize + convergence-check every k
-    # rounds (k=1 ≙ reference's per-iteration check; k>1 trades ≤k−1 extra
-    # rounds for fewer job round-trips/materializations — see operators/graph.py)
-    checkpoint_every: int = 1
     salt_buckets: int = 0  # >0: salt the blocking join on hot keys
     # concurrent writers in the output_write flush pool (stores + the three
     # observability appends). Overlapping IO-heavy write jobs cuts flush wall

@@ -31,9 +31,18 @@ from sql_identity_resolution_spark.config import (
 )
 
 
+# every top-level key load_config reads; any other key is an error, so a
+# setting the engine no longer has cannot be silently ignored
+_CONFIG_KEYS = frozenset({
+    "warehouse", "transcript_sources", "sources", "rules", "mappings", "exclusions",
+    "attributes", "trust", "max_iters", "cc_algorithm", "emit_duplicate_text_pairs",
+})
+
+
 def load_config(path: str) -> EngineConfig:
     """JSON (or YAML when pyyaml is available) → EngineConfig.
-    ≙ tools/load_metadata.py:9-13 loading metadata_samples/*.csv."""
+    ≙ tools/load_metadata.py:9-13 loading metadata_samples/*.csv.
+    Raises ``ValueError`` naming any top-level key it does not read."""
     with open(path) as f:
         text = f.read()
     try:
@@ -49,6 +58,9 @@ def load_config(path: str) -> EngineConfig:
             raise ValueError(f"{path}: neither valid JSON nor YAML: {e}") from e
     if not isinstance(doc, dict) or "warehouse" not in doc:
         raise ValueError(f"{path}: config must be a mapping with a 'warehouse' key")
+    unknown = sorted(set(doc) - _CONFIG_KEYS)
+    if unknown:
+        raise ValueError(f"{path}: unknown config key(s) {unknown}; known: {sorted(_CONFIG_KEYS)}")
 
     def build(cls, rows):
         return [cls(**r) for r in rows or []]
@@ -64,7 +76,6 @@ def load_config(path: str) -> EngineConfig:
         trust=build(SourceTrust, doc.get("trust")),
         max_iters=doc.get("max_iters", 30),
         cc_algorithm=doc.get("cc_algorithm", "auto"),
-        checkpoint_every=doc.get("checkpoint_every", 1),
     )
     # transcripts sources: {"table_id": ..., "path": ..., "lsh_threshold": ...}
     from sql_identity_resolution_spark.sources.transcripts import (

@@ -865,7 +865,6 @@ class IDRPipeline:
                 sub_edges,
                 algorithm=cfg.cc_algorithm,
                 max_iters=cfg.max_iters,
-                checkpoint_every=cfg.checkpoint_every,
                 edge_count_hint=res.edges_created,
                 star_threshold=cfg.cc_star_threshold_edges,
                 # bounded driver union-find fast path under the cap — gated
@@ -874,7 +873,6 @@ class IDRPipeline:
                 # the corpus itself is tiny (corpus-scale graphs always
                 # exceed the cap and run distributed).
                 local_max_edges=cfg.cc_local_max_edges,
-                frontier=cfg.cc_frontier,
             )
             res.lp_iterations = cc.iterations
             res.lp_converged = cc.converged

@@ -15,7 +15,9 @@ watermarking can be layered by filtering the micro-batch.
 
 from __future__ import annotations
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from sql_identity_resolution_spark.config import EngineConfig
@@ -46,9 +48,20 @@ class StreamingIDR:
     def _process_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        # land the micro-batch into the staging area the batch sources read;
-        # the INCR run picks up exactly the new watermark range (idempotent
-        # on replay: MERGE sinks + inclusive watermark)
+        # land the micro-batch into the staging area the batch sources read,
+        # less any (conv_id, turn_idx) already staged: a replayed epoch (same
+        # epoch_id, same rows) then appends nothing, so the INCR rerun sees no
+        # duplicated turns and is idempotent (MERGE sinks + inclusive
+        # watermark). The staged keys are filtered by a broadcast of the
+        # batch's keys, so the check is a scan, not a shuffle of the staging area.
+        keys = ["conv_id", "turn_idx"]
+        try:
+            staged = self.spark.read.schema(TURNS_SCHEMA).parquet(self.staging_dir).select(*keys)
+        except AnalysisException:  # the first epoch creates the staging area
+            staged = None
+        if staged is not None:
+            seen = staged.join(F.broadcast(batch_df.select(*keys)), keys, "left_semi")
+            batch_df = batch_df.join(seen, keys, "left_anti")
         batch_df.write.mode("append").parquet(self.staging_dir)
         res = self.pipeline.run(mode="INCR", run_id=f"stream_epoch_{epoch_id}")
         self.results.append(res)

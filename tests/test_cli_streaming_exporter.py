@@ -265,40 +265,41 @@ def test_webhook_and_datadog_exporters(spark, crm):
         export_datadog(pipe.catalog, api_key=None, run_id=res.run_id, post=fake_post)
 
 
-def test_streaming_incremental(spark, tmp_path):
-    from pyspark.sql import functions as F
+def _turns_rows(conv, text, ts):
+    return pd.DataFrame(
+        {
+            "conv_id": [conv],
+            "turn_idx": pd.array([0], dtype="int32"),
+            "role": ["user"],
+            "text": [text],
+            "tool": pd.Series([None], dtype="string"),
+            "ts": [ts],
+        }
+    )
 
-    from sql_identity_resolution_spark import EngineConfig, IDRPipeline, IdentifierMapping, Rule, SourceTable
+
+def _streaming_idr(spark, tmp_path):
+    """A StreamingIDR over a staging area seeded with conversation c1 (the
+    batch source needs at least one file before it can read it)."""
+    from sql_identity_resolution_spark import EngineConfig
+    from sql_identity_resolution_spark.sources.transcripts import transcripts_source
     from sql_identity_resolution_spark.streaming.incremental import StreamingIDR
 
-    incoming = tmp_path / "incoming"
     staging = tmp_path / "staging"
-    incoming.mkdir()
     staging.mkdir()
-
-    def turns_rows(conv, text, ts):
-        return pd.DataFrame(
-            {
-                "conv_id": [conv],
-                "turn_idx": pd.array([0], dtype="int32"),
-                "role": ["user"],
-                "text": [text],
-                "tool": pd.Series([None], dtype="string"),
-                "ts": [ts],
-            }
-        )
-
-    # staging needs at least one file before the batch source can read it
-    write_parquet(turns_rows("c1", "alpha beta gamma delta epsilon", datetime(2026, 1, 1)), str(staging / "seed.parquet"))
-
-    from sql_identity_resolution_spark.sources.transcripts import transcripts_source
-
+    write_parquet(_turns_rows("c1", "alpha beta gamma delta epsilon", datetime(2026, 1, 1)), str(staging / "seed.parquet"))
     source, rules, mappings = transcripts_source("chat", str(staging))
     cfg = EngineConfig(warehouse=str(tmp_path / "wh"), sources=[source], rules=rules, mappings=mappings)
-    sidr = StreamingIDR(spark, cfg, str(staging))
+    return StreamingIDR(spark, cfg, str(staging))
+
+
+def test_streaming_incremental(spark, tmp_path):
+    incoming = tmp_path / "incoming"
+    incoming.mkdir()
+    sidr = _streaming_idr(spark, tmp_path)
 
     # first micro-batch: an exact duplicate of c1 arrives
-    write_parquet(turns_rows("c2", "alpha beta gamma delta epsilon", datetime(2026, 1, 2)), str(incoming / "b1.parquet"))
+    write_parquet(_turns_rows("c2", "alpha beta gamma delta epsilon", datetime(2026, 1, 2)), str(incoming / "b1.parquet"))
     q = sidr.start(str(incoming), str(tmp_path / "ckpt"), trigger_seconds=1)
     try:
         q.processAllAvailable()
@@ -310,3 +311,51 @@ def test_streaming_incremental(spark, tmp_path):
         for r in sidr.pipeline.catalog.read("identity_resolved_membership_current").collect()
     }
     assert m["chat:c1"] == m["chat:c2"]
+
+
+def test_streaming_epoch_replay_is_idempotent(spark, tmp_path):
+    """Structured Streaming replays an epoch after a failure with the same
+    epoch_id and rows. The replay must leave each (conv_id, turn_idx) staged
+    once and publish the membership one application published."""
+    from sql_identity_resolution_spark.streaming.incremental import TURNS_SCHEMA
+
+    sidr = _streaming_idr(spark, tmp_path)
+    # an exact duplicate of c1: a doubled turn would change c2's text and
+    # break the R_FULL_TEXT_EXACT link
+    batch = spark.createDataFrame(
+        _turns_rows("c2", "alpha beta gamma delta epsilon", datetime(2026, 1, 2)), TURNS_SCHEMA
+    )
+
+    def membership():
+        rows = sidr.pipeline.catalog.read("identity_resolved_membership_current").collect()
+        return {r["entity_key"]: r["resolved_id"] for r in rows}
+
+    sidr._process_batch(batch, 1)
+    once = membership()
+    sidr._process_batch(batch, 1)
+    staged = spark.read.parquet(sidr.staging_dir).groupBy("conv_id", "turn_idx").count().collect()
+    assert sorted((r["conv_id"], r["turn_idx"], r["count"]) for r in staged) == [("c1", 0, 1), ("c2", 0, 1)]
+    assert membership() == once
+    assert once["chat:c2"] == once["chat:c1"]
+
+
+def test_load_config_rejects_unknown_keys(tmp_path):
+    """A config key the loader does not read (a typo, a removed setting, an
+    engine field the file cannot set) fails loudly instead of being ignored."""
+    from sql_identity_resolution_spark.plans.cli import load_config
+
+    cfg_path = tmp_path / "cfg.json"
+    cfg_path.write_text(json.dumps({"warehouse": str(tmp_path / "wh"), "max_iter": 5, "cc_local_max_edges": 0}))
+    with pytest.raises(ValueError, match=r"unknown config key\(s\) \['cc_local_max_edges', 'max_iter'\]"):
+        load_config(str(cfg_path))
+
+
+def test_example_pipeline_config_loads():
+    from pathlib import Path
+
+    from sql_identity_resolution_spark.plans.cli import load_config
+
+    cfg = load_config(str(Path(__file__).resolve().parents[1] / "examples" / "pipeline.json"))
+    assert cfg.cc_algorithm == "auto" and cfg.max_iters == 30
+    assert {s.table_id for s in cfg.sources} == {"crm", "chat"}
+    assert {r.rule_id for r in cfg.rules} >= {"R_EMAIL_EXACT", "R_PHONE_EXACT", "R_LSH_TEXT"}

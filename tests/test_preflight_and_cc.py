@@ -1,5 +1,6 @@
 """Preflight data-level validation (≙ reference idr_run.py:126-171 /
-IDR_ValidateMetadata.py) + the checkpoint_every CC-round-fusion knob."""
+IDR_ValidateMetadata.py) + every connected-components path against one
+independent reference."""
 
 from __future__ import annotations
 
@@ -100,7 +101,7 @@ def test_preflight_check_data_false_skips_loads(spark, tmp_path):
     assert IDRPipeline(spark, cfg).preflight(check_data=False) == []
 
 
-# --------------------------------------------------------------- checkpoint_every
+# ----------------------------------------------------- INCR local fast path
 
 
 def _chain(spark, n=12):
@@ -111,56 +112,6 @@ def _chain(spark, n=12):
         "left_entity_key string, right_entity_key string",
     )
     return nodes, edges
-
-
-@pytest.mark.parametrize("algo", ["hash_min", "star"])
-def test_checkpoint_every_fuses_rounds_same_labels(spark, algo):
-    from sql_identity_resolution_spark.operators.graph import alternating_star, hash_min_lp
-
-    fn = hash_min_lp if algo == "hash_min" else alternating_star
-    nodes, edges = _chain(spark, 12)
-    base = fn(nodes, edges, max_iters=40, checkpoint_every=1)
-    fused = fn(nodes, edges, max_iters=40, checkpoint_every=3)
-    assert base.converged and fused.converged
-    want = {(r["entity_key"], r["label"]) for r in base.labels.collect()}
-    got = {(r["entity_key"], r["label"]) for r in fused.labels.collect()}
-    assert got == want
-    assert len({lbl for _, lbl in got}) == 1  # one component, labeled by its min
-    # fused convergence is only detected at multiples of k (or the last round)
-    assert fused.iterations % 3 == 0 or fused.iterations == 40
-
-
-def test_checkpoint_every_runs_fewer_jobs(spark):
-    """The knob must be OBSERVABLE in the job count: k=4 fuses 4 rounds per
-    action. Measured with AQE off — under AQE every shuffle materialization is
-    its own job, so action count (what the knob controls) is masked."""
-    from sql_identity_resolution_spark.operators.graph import hash_min_lp
-
-    nodes, edges = _chain(spark, 12)
-    sc = spark.sparkContext
-
-    def jobs_during(k):
-        group = f"cc-jobs-k{k}"
-        sc.setJobGroup(group, group, False)
-        try:
-            res = hash_min_lp(nodes, edges, max_iters=40, checkpoint_every=k)
-        finally:
-            sc.setJobGroup("", "", False)
-        assert res.converged
-        return len(sc.statusTracker().getJobIdsForGroup(group))
-
-    aqe_was = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        j1 = jobs_during(1)
-        j4 = jobs_during(4)
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", aqe_was)
-    # 12 LP rounds: ~1 action/round at k=1 vs ~1 action per 4 rounds at k=4
-    assert j4 <= j1 / 2, f"expected fused rounds to halve jobs: k=1→{j1}, k=4→{j4}"
-
-
-# ----------------------------------------------------- INCR local fast path
 
 
 def test_local_union_find_matches_distributed(spark):
@@ -206,9 +157,10 @@ def test_local_union_find_cap_falls_back_to_distributed(spark):
 
 
 def test_frontier_matches_dense_hash_min(spark):
-    """Frontier (vertex-activation) hash-min must produce IDENTICAL labels to
-    the dense reference-literal form on an adversarial mix (long chain + star
-    + singletons), at k=1 and with fused rounds."""
+    """Frontier (vertex-activation) hash-min, now the only hash-min form,
+    must produce the labels the dense form did — the MIN entity_key of each
+    component — on an adversarial mix (long chain + star + random pairs +
+    singletons), checked against the in-test dict union-find."""
     import random
 
     from sql_identity_resolution_spark.operators.graph import hash_min_lp
@@ -221,13 +173,11 @@ def test_frontier_matches_dense_hash_min(spark):
     keys = sorted({k for r in rows for k in r} | {"iso1", "iso2"})
     nodes = spark.createDataFrame([(k,) for k in keys], "entity_key string")
     edges = spark.createDataFrame(rows, "left_entity_key string, right_entity_key string")
-    for k in (1, 3):
-        dense = hash_min_lp(nodes, edges, max_iters=40, checkpoint_every=k, frontier=False)
-        front = hash_min_lp(nodes, edges, max_iters=40, checkpoint_every=k, frontier=True)
-        assert dense.converged and front.converged
-        got_d = {(r["entity_key"], r["label"]) for r in dense.labels.collect()}
-        got_f = {(r["entity_key"], r["label"]) for r in front.labels.collect()}
-        assert got_f == got_d
+    ref = _dict_union_find(rows)
+    front = hash_min_lp(nodes, edges, max_iters=40)
+    assert front.converged
+    got = {(r["entity_key"], r["label"]) for r in front.labels.collect()}
+    assert got == {(k, ref.get(k, k)) for k in keys}
     # per-round decomposition is recorded and the delta hits 0 at convergence
     assert front.rounds and front.rounds[-1]["delta"] == 0
     assert all(set(r) == {"sec", "delta"} for r in front.rounds)
@@ -238,12 +188,32 @@ def test_frontier_matches_dense_hash_min(spark):
 
 def _adversarial_rows():
     """A 60-node chain, a 25-leaf hub star, duplicate edges (both
-    orientations) and self-loops; callers add isolated nodes."""
+    orientations), self-loops, and keys whose code-point order differs from
+    their numeric, case-folded or UTF-16 order; callers add isolated nodes."""
     rows = [(f"c{i:03d}", f"c{i+1:03d}") for i in range(59)]
     rows += [("hub", f"s{i:02d}") for i in range(25)]
     rows += [("c010", "c011"), ("c011", "c010"), ("s03", "hub"), ("hub", "s03")]
     rows += [("c020", "c020"), ("hub", "hub"), ("loop", "loop")]
+    rows += [("a9", "a10"), ("a", "B"), ("zeta", "éclair"), ("\U0001F600", "\uffff")]
     return rows
+
+
+def _dict_union_find(pairs) -> dict:
+    """Reference labels for the CC tests: {node: component min} by a plain
+    dict union-find, sharing no code with the engine."""
+    pairs = list(pairs)
+    parent: dict = {}
+
+    def find(x):
+        while parent.get(x, x) != x:
+            x = parent[x]
+        return x
+
+    for a, b in pairs:
+        a, b = find(a), find(b)
+        if a != b:
+            parent[max(a, b)] = min(a, b)
+    return {x: find(x) for p in pairs for x in p}
 
 
 def test_union_find_pairs_kernel_matches_dict_union_find():
@@ -258,18 +228,7 @@ def test_union_find_pairs_kernel_matches_dict_union_find():
     for _ in range(50):
         n, m = int(rng.integers(1, 60)), int(rng.integers(0, 120))
         left, right = rng.integers(0, n, m) * 3 + 5, rng.integers(0, n, m) * 3 + 5
-        parent: dict = {}
-
-        def find(x):
-            while parent.get(x, x) != x:
-                x = parent[x]
-            return x
-
-        for a, b in zip(left.tolist(), right.tolist()):
-            a, b = find(a), find(b)
-            if a != b:
-                parent[max(a, b)] = min(a, b)
-        want = {(x, find(x)) for x in set(left.tolist()) | set(right.tolist()) if find(x) != x}
+        want = {(x, r) for x, r in _dict_union_find(zip(left.tolist(), right.tolist())).items() if x != r}
         u, v = _union_find_pairs(left, right)
         assert set(zip(u.tolist(), v.tolist())) == want
         assert len(u) <= len({(a, b) for a, b in zip(left.tolist(), right.tolist()) if a != b})
@@ -287,23 +246,44 @@ def _adversarial_graph(spark, partitions):
 
 @pytest.mark.parametrize("partitions", [8, 1])
 def test_star_prepass_matches_local_union_find(spark, partitions):
-    """The contracted star loop labels an adversarial graph exactly as the
-    driver union-find does, whether its edges are spread over 8 partitions
-    or sit in one. The pre-pass leaves a star forest either way, so the loop
-    converges at its first round."""
-    from sql_identity_resolution_spark.operators.graph import _local_union_find, alternating_star
+    """Hash-min, the contracted star loop and the driver union-find each
+    label an adversarial graph exactly as the in-test dict union-find does,
+    whether its edges are spread over 8 partitions or sit in one. Star and
+    the driver path share ``_union_find_pairs``, so neither is the other's
+    reference. The star pre-pass leaves a star forest either way, so its
+    loop converges at its first round."""
+    from sql_identity_resolution_spark.operators.graph import (
+        _local_union_find,
+        alternating_star,
+        hash_min_lp,
+    )
 
     nodes, edges, canonical = _adversarial_graph(spark, partitions)
-    want = {(r["entity_key"], r["label"]) for r in _local_union_find(nodes, edges, 1000).labels.collect()}
-    res = alternating_star(nodes, edges, max_iters=40)
-    assert res.converged
-    assert {(r["entity_key"], r["label"]) for r in res.labels.collect()} == want
-    assert res.contraction["edges_in"] == len(canonical)
-    assert res.contraction["pairs_out"] <= res.contraction["edges_in"]
-    assert res.rounds and all(set(r) == {"sec", "pairs"} for r in res.rounds)
-    assert res.iterations == len(res.rounds) == 1
+    ref = _dict_union_find(_adversarial_rows())
+    want = {(k, ref.get(k, k)) for k in (r["entity_key"] for r in nodes.collect())}
+    assert ("a10", "a10") in want and ("a9", "a10") in want and ("a", "B") in want
+    assert ("éclair", "zeta") in want and ("\U0001F600", "\uffff") in want
+
+    runs = {
+        "hash_min": hash_min_lp(nodes, edges, max_iters=80),
+        "star": alternating_star(nodes, edges, max_iters=40),
+        "local_union_find": _local_union_find(nodes, edges, 1000),
+    }
+    for path, res in runs.items():
+        assert res.converged and res.path == path, path
+        assert {(r["entity_key"], r["label"]) for r in res.labels.collect()} == want, path
+
+    lp = runs["hash_min"]
+    # per-round decomposition is recorded and the delta hits 0 at convergence
+    assert lp.rounds and lp.rounds[-1]["delta"] == 0
+    assert all(set(r) == {"sec", "delta"} for r in lp.rounds)
+    star = runs["star"]
+    assert star.contraction["edges_in"] == len(canonical)
+    assert star.contraction["pairs_out"] <= star.contraction["edges_in"]
+    assert star.rounds and all(set(r) == {"sec", "pairs"} for r in star.rounds)
+    assert star.iterations == len(star.rounds) == 1
     # a star forest: one pair per node that is not its component's min
-    assert res.contraction["pairs_out"] == len(want) - len({lbl for _, lbl in want})
+    assert star.contraction["pairs_out"] == len(want) - len({lbl for _, lbl in want})
 
 
 def test_star_above_contract_cap_skips_prepass(spark, monkeypatch):
