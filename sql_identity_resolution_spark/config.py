@@ -160,18 +160,11 @@ class EngineConfig:
     exclusions: list[Exclusion] = field(default_factory=list)
     attributes: list[AttributeMapping] = field(default_factory=list)
     trust: list[SourceTrust] = field(default_factory=list)
-    max_iters: int = 30  # reference default MAX_ITERS (idr_run.py:37)
-    cc_algorithm: str = "auto"  # hash_min | star | auto (star above threshold)
-    # above this edge count `auto` skips the hash-min probe and goes straight
-    # to large/small-star. Measured on a 9.46M-edge reference-shaped graph
-    # (400k-conv corpus, local[16]): hash-min converged in 4 rounds at 24.2 s
-    # vs star's 42.4 s for the same labels — a hash-min round is ~2 shuffles
-    # vs star's ~8, and the probe is never wasted (its partial labels are a
-    # valid contraction the star fallback runs on — operators/graph.py). The
-    # probe only loses when the graph needs near-all of hash_min_budget rounds
-    # AND still escalates, bounded at ~2 star-rounds of extra cost, so the
-    # threshold sits high; tune per workload.
-    cc_star_threshold_edges: int = 100_000_000
+    # the round budget of the whole connected-components call: hash-min
+    # probe rounds, star rounds and the one-task union-find each count one
+    # (reference default MAX_ITERS, idr_run.py:37). RunResult.lp_iterations
+    # reports what a run used: 1 for the driver union-find or a contraction.
+    max_iters: int = 30
     # Small-graph fast path: when the graph to cluster fits under this many
     # edges (a bounded, Arrow-batched collect — ~40 MB of keys at the
     # default, union-find ~1.1 s), run union-find on the driver instead of

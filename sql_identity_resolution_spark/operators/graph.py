@@ -1,29 +1,30 @@
 """Stage 30/31: impacted subgraph + connected components.
 
-Two CC implementations:
+``connected_components`` labels every node with the MIN entity_key of its
+component (the reference's resolved_id, sql/common/40:2) along one of three
+routes, chosen by observed size alone:
 
-- ``hash_min_lp`` — the reference's algorithm verbatim at the logical level
-  (``sql/common/31_label_propagation_step.sql``): labels start as self, each
-  iteration takes MIN over self ∪ neighbor labels; converges in O(diameter)
-  rounds. The reference's anchor-star edges keep diameters tiny (observed 6
-  iterations at 10M rows, docs/performance/benchmark-results.md:35).
+- a graph small enough for the driver is collected once and labeled by
+  ``_local_union_find``;
+- otherwise one long-id pass (``_with_long_ids`` → ``_cc_long``) builds the
+  undirected edge list once and observes its size. A graph of at most
+  ``_STAR_CONTRACT_MAX_EDGES`` canonical edges is union-found in one
+  ``mapInArrow`` task — a vectorized numpy kernel replacing the loop — and
+  the call ends there;
+- a larger graph takes up to ``_PROBE_ROUNDS`` rounds of hash-min label
+  propagation — the reference's algorithm (``sql/common/31``), which the
+  reference's anchor-star edges converge in a handful of rounds (observed 6
+  at 10M rows, docs/performance/benchmark-results.md:35). An unconverged
+  probe contracts the pairs onto its partial labels, and large-star/
+  small-star rounds (Kiveris et al., SoCC'14: O(log² n) rounds regardless
+  of diameter) run on them until the same size gate ends the loop with the
+  one-task union-find.
 
-- ``alternating_star`` — large-star/small-star (Kiveris et al., "Connected
-  Components in MapReduce and Beyond", SoCC'14): O(log² n) rounds regardless
-  of diameter; the scale path the north rule mandates for 10^12-turn graphs
-  where a single adversarial chain would stall hash-min. A graph of at most
-  ``_STAR_CONTRACT_MAX_EDGES`` canonical edges is first contracted by one
-  ``mapInArrow`` task running a vectorized numpy union-find, which hands the
-  loop a star forest: the loop then converges in a single round.
-
-Both run as driver-controlled DataFrame loops with ``localCheckpoint()`` to
-truncate lineage (the reference's table-swap per iteration,
+The rounds are driver-controlled DataFrame loops with ``localCheckpoint()``
+to truncate lineage (the reference's table-swap per iteration,
 idr_run.py:480-481, plays the same role). Every round materializes once and
 checks convergence, as the reference does (idr_run.py:440-481), pulling
 exactly ONE observation per materialization to the driver.
-
-A graph small enough for the driver skips both loops: ``_local_union_find``
-collects it and labels it with the same ``_union_find_pairs`` kernel.
 """
 
 from __future__ import annotations
@@ -43,17 +44,16 @@ class CCResult:
     converged: bool
     # which execution path produced the labels — surfaced as RunResult.cc_path
     # and in bench JSON so a reader can tell a distributed-LP timing from the
-    # bounded driver union-find fast path: "hash_min" | "star" |
-    # "hash_min+star" (probe escalated) | "local_union_find"
+    # bounded driver union-find fast path: "local_union_find" | "contracted"
+    # (one-task union-find) | "hash_min" (probe converged) | "star" |
+    # "hash_min+star" (probe escalated); the star paths may end with the
+    # contraction once their pairs fit the gate
     path: str = "distributed"
-    # per materialized round — hash-min: {"sec": wall, "delta": labels
-    # changed}; star: {"sec": wall, "pairs": forest pairs after the round} —
-    # the scaling decomposition the bench publishes (empty for non-loop paths)
+    # one entry per iteration, in order — hash-min: {"sec", "delta": labels
+    # changed}; star: {"sec", "pairs": forest pairs after the round};
+    # contraction: {"sec", "edges_in", "pairs_out"} — the scaling
+    # decomposition the bench publishes (empty for the local path)
     rounds: list = field(default_factory=list)
-    # star's union-find pre-pass: {"sec", "edges_in" (canonical edges),
-    # "pairs_out"} (empty when it did not run: another path, or a graph
-    # above _STAR_CONTRACT_MAX_EDGES)
-    contraction: dict = field(default_factory=dict)
 
 
 def impacted_nodes(edges_new: DataFrame) -> DataFrame:
@@ -158,24 +158,30 @@ def subgraph(
 # fall back to shuffles, which is the only shape that works there.
 _CC_BROADCAST_MAX_NODES = 4_000_000
 
-# star pre-pass cap: a canonical edge list this small is union-found in ONE
-# Python task (coalesce(1) + mapInArrow) before the star loop. The kernel
+# the size gate: a canonical edge list this small is union-found in ONE
+# Python task (coalesce(1) + mapInArrow), and that ends the call. The kernel
 # holds ~100 B per edge (measured peak: +101 MB at 1M edges, +405 MB at 4M;
 # ~1 s per 1M edges on one core), so the cap bounds the worker's memory,
-# which sits outside Spark's memory manager. Larger graphs run the loop on
-# the canonical edges: a kernel per partition of a many-partition edge list
-# leaves the cross-partition structure to the loop, which then takes as
-# many rounds as without it (measured 9-10 at 4-32 partitions).
+# which sits outside Spark's memory manager. A kernel per partition of a
+# many-partition edge list leaves the cross-partition structure to the
+# loop, which then takes as many rounds as without it (measured 9-10 at
+# 4-32 partitions), so larger graphs run the rounds until they fit.
 _STAR_CONTRACT_MAX_EDGES = 1_000_000
 
+# hash-min rounds the `auto` probe may take before it escalates to star.
+# Reference-shaped (anchor-star) graphs above the gate converge well within
+# it: 2.375M edges in 5 rounds, 33.9-36.7 s, where the star loop took
+# 75-87 s (4 cores, local mode).
+_PROBE_ROUNDS = 8
 
-def _with_long_ids(algo_fn, nodes: DataFrame, edges: DataFrame, **kw) -> CCResult:
-    """Run a CC loop on dense LONG node ids, then restore string semantics.
 
-    Entity keys are ~17-40 byte strings; every CC iteration shuffles and
-    hash-joins the full label table, so iterating on 8-byte longs cuts the
-    per-round shuffle width and hash cost severalfold (standard practice —
-    GraphFrames/GraphX do the same). The long ids come from
+def _with_long_ids(nodes: DataFrame, edges: DataFrame, max_iters: int, probe: bool) -> CCResult:
+    """Label the graph on dense LONG node ids, then restore string semantics.
+
+    Entity keys are ~17-40 byte strings; every CC round shuffles and
+    hash-joins the label or pair table, so iterating on 8-byte longs cuts
+    the per-round shuffle width and hash cost severalfold (standard practice
+    — GraphFrames/GraphX do the same). The long ids come from
     ``monotonically_increasing_id`` (no sort, no global coordination); their
     ORDER is arbitrary, so after convergence each component's long label is
     remapped to the MIN STRING key within the component — one groupBy + two
@@ -185,33 +191,7 @@ def _with_long_ids(algo_fn, nodes: DataFrame, edges: DataFrame, **kw) -> CCResul
     The translation joins broadcast the mapping when the node count is small
     enough (`_CC_BROADCAST_MAX_NODES`) — the count is a free in-memory action
     on the just-checkpointed frame, the same size-adaptive gate AQE applies.
-
-    AQE is DISABLED for the duration of the loop for the HASH-MIN variant
-    only (``disable_aqe``, restored on exit): under AQE every exchange
-    materializes as its own job, so each CC round pays 2-3 scheduler
-    barriers instead of 1 — profiling at 400k/local[16]
-    (campaigns_r5/profile_400k_16.json) showed the LP stage spending 32
-    scheduler stages on 664 MB of total shuffle (~0.4 s of parallel work per
-    stage): the floor is stage-launch count, not bytes, and hash-min's joins
-    are explicitly hinted with pre-arranged partitioning so AQE re-planning
-    adds nothing (pair4: LP 21.1 → 13.4 s at local[16]). The STAR loop is
-    the opposite regime — ~8 un-hinted shuffles per round whose tiny
-    intermediates AQE coalesces down to a handful of tasks; forcing AQE off
-    there measured 3× SLOWER on the sf0.1 diameter-hundreds graph (16.3 s
-    vs 5.8 s best-of-3 for the testdata CC query), so star keeps AQE on.
     """
-    spark = nodes.sparkSession
-    if not kw.pop("disable_aqe", False):
-        return _with_long_ids_inner(algo_fn, nodes, edges, **kw)
-    prev_aqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        return _with_long_ids_inner(algo_fn, nodes, edges, **kw)
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
-
-
-def _with_long_ids_inner(algo_fn, nodes: DataFrame, edges: DataFrame, **kw) -> CCResult:
     mapping = (
         nodes.select("entity_key")
         .withColumn("nid", F.monotonically_increasing_id())
@@ -228,19 +208,152 @@ def _with_long_ids_inner(algo_fn, nodes: DataFrame, edges: DataFrame, **kw) -> C
         .join(rmap, "right_entity_key")
         .select(F.col("lid").alias("left_nid"), F.col("rid").alias("right_nid"))
     )
-    lnodes = mapping.select("nid")
-    res = algo_fn(lnodes, ledges, **kw)  # labels: (nid, lid)
+    res = _cc_long(mapping.select("nid"), ledges, max_iters, probe)  # labels: (nid, lid)
     with_keys = res.labels.join(
         F.broadcast(mapping) if n_nodes <= _CC_BROADCAST_MAX_NODES else mapping, "nid"
     ).select("entity_key", "lid")
     reps = with_keys.groupBy("lid").agg(F.min("entity_key").alias("label"))
-    labels = with_keys.join(reps.hint("shuffle_hash"), "lid").select("entity_key", "label")
-    return CCResult(labels=labels, iterations=res.iterations, converged=res.converged,
-                    path=res.path, rounds=res.rounds, contraction=res.contraction)
+    res.labels = with_keys.join(reps.hint("shuffle_hash"), "lid").select("entity_key", "label")
+    return res
 
 
-def _hash_min_lp_long(nodes: DataFrame, edges: DataFrame, max_iters: int) -> CCResult:
-    """Min-label propagation on long ids; see hash_min_lp for the contract.
+def _signature():
+    """(count, order-insensitive content hash) of a canonical (u > v) pair
+    set — a set-equality fingerprint riding on the checkpoint that
+    materializes the pairs, so it costs no extra job. Collision-stopping-
+    early risk ~2^-64."""
+    return [
+        F.count(F.lit(1)).alias("n"),
+        F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")).alias("h"),
+    ]
+
+
+def _canon(df: DataFrame, a: str, b: str) -> DataFrame:
+    return (
+        df.filter(F.col(a) != F.col(b))
+        .select(F.greatest(a, b).alias("u"), F.least(a, b).alias("v"))
+        .distinct()
+    )
+
+
+def _cc_long(nodes: DataFrame, edges: DataFrame, max_iters: int, probe: bool) -> CCResult:
+    """The distributed CC driver on long ids: ``nodes`` (nid), ``edges``
+    (left_nid, right_nid) → labels (nid, lid = component min nid).
+
+    One undirected edge list ``und`` (both orientations, deduplicated,
+    checkpointed pre-partitioned on ``dst``) serves every step, and the
+    checkpoint that builds it observes its size and its canonical half's
+    signature. Then one size gate decides, before every step:
+
+    - a canonical pair list of at most ``_STAR_CONTRACT_MAX_EDGES`` is
+      union-found in one task and the call ends there;
+    - otherwise (``probe``) up to ``_PROBE_ROUNDS`` hash-min rounds run on
+      ``und``; converged labels end the call;
+    - an unconverged probe contracts the pairs onto its partial labels, and
+      large/small-star rounds run on them until the signature repeats or the
+      pairs fit the gate.
+
+    ``max_iters`` bounds all of it: every hash-min round, star round and the
+    contraction counts one iteration and appends one ``rounds`` entry."""
+    from pyspark.sql import Observation
+
+    spark = nodes.sparkSession
+    base = nodes.select("nid", F.col("nid").alias("lid"))
+    rounds: list[dict] = []
+    path = "star"
+    obs = Observation("cc_edges")
+    e = edges.filter(F.col("left_nid") != F.col("right_nid"))
+    # AQE is off while the edge list is built and the probe runs (restored
+    # on exit). Under AQE every exchange materializes as its own job, so
+    # each hash-min round pays 2-3 scheduler barriers instead of 1, and its
+    # joins are hinted with pre-arranged partitioning so re-planning adds
+    # nothing (pair4: LP 21.1 → 13.4 s at local[16]); a checkpoint built
+    # under AQE also loses its partitioning, so every round would exchange
+    # ``und`` again. The star rounds are the opposite regime — un-hinted
+    # shuffles whose tiny intermediates AQE coalesces; AQE off measured 3×
+    # slower there — so they keep AQE on.
+    prev_aqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        # Order matters for the exchange count: double FIRST, repartition on
+        # the probe's join key, THEN dedup — HashPartitioning(dst) satisfies
+        # the dedup's ClusteredDistribution(src, dst) (equal pairs share a
+        # dst), so the whole build is ONE shuffle.
+        und = (
+            e.select(F.col("left_nid").alias("src"), F.col("right_nid").alias("dst"))
+            .union(e.select(F.col("right_nid").alias("src"), F.col("left_nid").alias("dst")))
+            .repartition("dst")
+            .dropDuplicates(["src", "dst"])
+            .observe(
+                obs,
+                F.count(F.lit(1)).alias("n"),
+                F.sum(F.when(F.col("src") > F.col("dst"), F.xxhash64("src", "dst"))
+                      .cast("decimal(38,0)")).alias("h"),
+            )
+            .localCheckpoint(eager=True)
+        )
+        # every undirected edge appears once per orientation; its canonical
+        # (u > v) half is already distinct
+        sig = (obs.get["n"] // 2, obs.get["h"])
+        if probe and sig[0] > _STAR_CONTRACT_MAX_EDGES:
+            base, rounds = _hash_min(nodes, und, min(_PROBE_ROUNDS, max_iters))
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
+    pairs = und.where(F.col("src") > F.col("dst")).select(
+        F.col("src").alias("u"), F.col("dst").alias("v"))
+    if rounds:
+        if not rounds[-1]["delta"]:
+            return CCResult(labels=base, iterations=len(rounds), converged=True,
+                            path="hash_min", rounds=rounds)
+        # the probe is never wasted: after k rounds every node carries the
+        # min id within k hops — a valid partial contraction. A component's
+        # min keeps label = self, so the pairs between labels have the same
+        # components, with the same minima, as the graph.
+        path = "hash_min+star"
+        obs_p = Observation("cc_probe_pairs")
+        lu = base.select(F.col("nid").alias("u"), F.col("lid").alias("lu"))
+        lv = base.select(F.col("nid").alias("v"), F.col("lid").alias("lv"))
+        pairs = (
+            _canon(pairs.join(lu, "u").join(lv, "v"), "lu", "lv")
+            .observe(obs_p, *_signature())
+            .localCheckpoint(eager=True)
+        )
+        sig = (obs_p.get["n"], obs_p.get["h"])
+    converged = False
+    while len(rounds) < max_iters:
+        t_round = time.time()
+        if sig[0] <= _STAR_CONTRACT_MAX_EDGES:
+            # the gate: one union-find over the whole (bounded) pair list in
+            # one task; the star forest it emits is final
+            obs_c = Observation(f"cc_contract_{len(rounds)}")
+            pairs = (
+                pairs.coalesce(1)
+                .mapInArrow(_contract_partition, "u long, v long")
+                .observe(obs_c, F.count(F.lit(1)).alias("n"))
+                .localCheckpoint(eager=True)
+            )
+            path = path if rounds else "contracted"
+            rounds.append({"sec": round(time.time() - t_round, 3), "edges_in": int(sig[0]),
+                           "pairs_out": int(obs_c.get["n"])})
+            converged = True
+            break
+        pairs, nxt = _star_round(pairs, len(rounds))
+        rounds.append({"sec": round(time.time() - t_round, 3), "pairs": int(nxt[0])})
+        if nxt == sig:
+            converged = True
+            break
+        sig = nxt
+    parents = pairs.groupBy(F.col("u").alias("lid")).agg(F.min("v").alias("root"))
+    labels = base.join(parents, "lid", "left").select("nid", F.coalesce("root", "lid").alias("lid"))
+    return CCResult(labels=labels, iterations=len(rounds), converged=converged, path=path,
+                    rounds=rounds)
+
+
+def _hash_min(nodes: DataFrame, und: DataFrame, max_rounds: int) -> tuple[DataFrame, list]:
+    """Up to ``max_rounds`` rounds of min-label propagation on long ids
+    (sql/common/31; idr_run.py:440-481): labels ← self; each round takes
+    MIN over self ∪ neighbours' labels and stops when Σ(cur≠next)=0.
+    Returns (labels (nid, lid), one ``{"sec", "delta"}`` per round).
 
     Vertex-activation form (what Pregel/GraphX LP does): only labels that
     CHANGED last round are offered to neighbors. It yields the labels of the
@@ -255,31 +368,15 @@ def _hash_min_lp_long(nodes: DataFrame, edges: DataFrame, max_iters: int) -> CCR
     the candidate groupBy shuffles only frontier-incident rows, and the
     labels⟕cands merge is co-partitioned on nid (both sides hash(nid) with
     the same partition count) — ONE delta-sized exchange per round, zero
-    O(V)/O(E) exchanges after round 1."""
+    O(V)/O(E) exchanges after round 1. Both joins are hinted SHUFFLE_HASH:
+    the planner would otherwise broadcast the label table, a driver collect
+    every round. Convergence is an ``Observation`` on the job that
+    materializes the next labels: ONE Spark action per round."""
     from pyspark.sql import Observation
 
-    # parallel edges are common (the same pair matches under several rules /
-    # identifier types — exact sig keys AND a passing LSH score); topology is
-    # all CC needs, so dedup ONCE on the 16-byte long pair before the loop —
-    # every round's neighbor join and groupBy shrinks by the multiplicity.
-    # Order matters for the exchange count: double FIRST, repartition on the
-    # loop's join key, THEN dedup — HashPartitioning(dst) satisfies the
-    # dedup's ClusteredDistribution(src, dst) (equal pairs share a dst), so
-    # the aggregate reuses the repartition exchange and the whole und build
-    # is ONE shuffle instead of two (distinct-then-repartition exchanged the
-    # edge list twice; plan-asserted in tests).
-    und = (
-        edges.select(F.col("left_nid").alias("src"), F.col("right_nid").alias("dst"))
-        .union(edges.select(F.col("right_nid").alias("src"), F.col("left_nid").alias("dst")))
-        .repartition("dst")
-        .dropDuplicates(["src", "dst"])
-        .localCheckpoint(eager=True)
-    )
     # nid-partitioned so every round's labels⟕cands merge is exchange-free
     labels = nodes.select("nid", F.col("nid").alias("lid")).repartition("nid").localCheckpoint(eager=True)
     front = labels  # round 1: every node is active (offers its own label)
-    iterations = 0
-    converged = False
     rounds: list[dict] = []
     # layered tail rounds: once the frontier is small, checkpoint ONLY the
     # changed labels and keep the full label table as overlays on the last
@@ -294,11 +391,8 @@ def _hash_min_lp_long(nodes: DataFrame, edges: DataFrame, max_iters: int) -> CCR
     # doubled the estimate's bit length (Catalyst spent minutes on BigInt
     # products after ~12 layered rounds on a 60-node chain).
     layers: list[DataFrame] = []
-    first_delta: int | None = None
-    prev_delta: int | None = None
-    for i in range(max_iters):
+    for i in range(max_rounds):
         t_round = time.time()
-        iterations = i + 1
         cands = (
             und.join(front.withColumnRenamed("nid", "dst").hint("shuffle_hash"), "dst", "inner")
             .groupBy(F.col("src").alias("nid"))
@@ -311,12 +405,7 @@ def _hash_min_lp_long(nodes: DataFrame, edges: DataFrame, max_iters: int) -> CCR
         )
         obs = Observation(f"lp_{i}")
         delta_agg = F.sum(F.when(F.col("lid") != F.col("cur"), 1).otherwise(0)).alias("delta")
-        layered = (
-            len(layers) < 3
-            and first_delta is not None
-            and prev_delta <= max(1, first_delta // 4)
-        )
-        if layered:
+        if len(layers) < 3 and rounds and rounds[-1]["delta"] <= max(1, rounds[0]["delta"] // 4):
             # write only the CHANGED labels; the full table stays the lazy
             # base⟕layers overlay (later layers win via sequential coalesce)
             changed = (
@@ -325,7 +414,7 @@ def _hash_min_lp_long(nodes: DataFrame, edges: DataFrame, max_iters: int) -> CCR
                 .select("nid", "lid")
                 .localCheckpoint(eager=True)
             )
-            delta = obs.get["delta"]
+            delta = int(obs.get["delta"] or 0)
             front = changed
             if delta:
                 layers.append(changed)
@@ -336,45 +425,15 @@ def _hash_min_lp_long(nodes: DataFrame, edges: DataFrame, max_iters: int) -> CCR
             )
             # the checkpoint IS the action that fills the observation
             nxt = nxt.localCheckpoint(eager=True)
-            delta = obs.get["delta"]
+            delta = int(obs.get["delta"] or 0)
             labels = nxt.select("nid", "lid")
             layers = []
             # in-memory narrow filter over the checkpointed frame — no job
             front = nxt.where("_chg").select("nid", "lid")
-        rounds.append({"sec": round(time.time() - t_round, 3), "delta": int(delta or 0)})
-        if first_delta is None:
-            first_delta = int(delta or 0)
-        prev_delta = int(delta or 0)
+        rounds.append({"sec": round(time.time() - t_round, 3), "delta": delta})
         if not delta:
-            converged = True
             break
-    return CCResult(labels=labels, iterations=iterations, converged=converged,
-                    path="hash_min", rounds=rounds)
-
-
-def hash_min_lp(nodes: DataFrame, edges: DataFrame, max_iters: int = 30) -> CCResult:
-    """Min-label propagation to convergence (sql/common/31; idr_run.py:440-481).
-
-    labels ← nodes self-labeled; repeat: next = MIN(self ∪ neighbors' labels)
-    grouped by node; stop when Σ(cur≠next)=0. Each round materializes once
-    and checks convergence, as the reference does.
-
-    Scale shape (beyond the reference's per-statement model):
-    - iterates on dense LONG ids (see ``_with_long_ids``) — per-round shuffles
-      carry 8-byte keys, not entity strings;
-    - the undirected edge list is checkpointed ONCE, pre-partitioned on the
-      join key, and reused every iteration;
-    - the neighbor join is hinted SHUFFLE_HASH — the planner would otherwise
-      broadcast the label table, which means a driver collect EVERY iteration
-      (serial, and impossible at 10^9 labels anyway);
-    - only the frontier (labels changed last round) is offered to neighbors,
-      so per-round shuffle is O(frontier-incident edges), not O(E);
-    - convergence is an ``Observation`` on the same job that materializes the
-      next labels: ONE Spark action per iteration total, carrying each node's
-      previous label through the labels⟕candidates merge instead of
-      re-joining cur×next.
-    """
-    return _with_long_ids(_hash_min_lp_long, nodes, edges, max_iters=max_iters, disable_aqe=True)
+    return labels, rounds
 
 
 def _union_find_pairs(left: np.ndarray, right: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
@@ -426,16 +485,19 @@ def _contract_partition(batches):
         yield pa.RecordBatch.from_arrays([pa.array(u), pa.array(v)], names=["u", "v"])
 
 
-def _alternating_star_long(nodes: DataFrame, edges: DataFrame, max_iters: int) -> CCResult:
-    """Large/small-star on long ids; see alternating_star for the contract."""
-    from pyspark.sql import Observation
+def _star_round(pairs: DataFrame, i: int) -> tuple[DataFrame, tuple]:
+    """One large-star/small-star round (Kiveris et al., "Connected Components
+    in MapReduce and Beyond", SoCC'14) over a canonical (u > v) pair list:
 
-    def _canon(df: DataFrame, a: str, b: str) -> DataFrame:
-        return (
-            df.filter(F.col(a) != F.col(b))
-            .select(F.greatest(a, b).alias("u"), F.least(a, b).alias("v"))
-            .distinct()
-        )
+      large-star: for every node u, connect every strictly-larger neighbor v
+                  to m(u) = min(N(u) ∪ {u});
+      small-star: connect every parent-or-smaller neighbor, and u, to m(u).
+
+    O(log²) rounds regardless of diameter; each round is groupBy-min + join —
+    shuffle-friendly and skew-handled by AQE. Returns the checkpointed next
+    pairs and their ``_signature``; an unchanged signature is the fixed point
+    (every node points at its component min)."""
+    from pyspark.sql import Observation
 
     def _nbrs(pairs_df: DataFrame) -> DataFrame:
         return pairs_df.select(F.col("u").alias("src"), F.col("v").alias("dst")).union(
@@ -443,103 +505,25 @@ def _alternating_star_long(nodes: DataFrame, edges: DataFrame, max_iters: int) -
         )
 
     def _with_min(nbrs: DataFrame) -> DataFrame:
-        # m(u) = min(Γ(u) ∪ {u}); SHUFFLE_HASH so the per-round min table is
-        # never driver-broadcast (serial collect per round, size-unbounded)
+        # SHUFFLE_HASH so the per-round min table is never driver-broadcast
+        # (serial collect per round, size-unbounded)
         mins = nbrs.groupBy("src").agg(F.least(F.min("dst"), F.first("src")).alias("m"))
         return nbrs.join(mins.hint("shuffle_hash"), "src")
 
-    def _signature():
-        """(count, order-insensitive content hash) — set-equality fingerprint;
-        one Observation, no extra jobs. Collision-stopping-early risk ~2^-64."""
-        return [
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")).alias("h"),
-        ]
-
-    # the input's signature rides on the checkpoint that materializes it, so
-    # a first round that changes nothing converges at iteration 1
-    obs_in = Observation("star_input")
-    pairs = _canon(edges, "left_nid", "right_nid").observe(obs_in, *_signature()).localCheckpoint(eager=True)
-    prev_sig = (obs_in.get["n"], obs_in.get["h"])
-    contraction: dict = {}
-    if prev_sig[0] <= _STAR_CONTRACT_MAX_EDGES:
-        # pre-pass: one union-find over the whole (bounded) edge list in one
-        # task; the star forest it emits is already the loop's fixed point
-        t_pre = time.time()
-        obs_c = Observation("star_contracted")
-        pairs = (
-            pairs.coalesce(1)
-            .mapInArrow(_contract_partition, "u long, v long")
-            .observe(obs_c, *_signature())
-            .localCheckpoint(eager=True)
-        )
-        contraction = {"sec": round(time.time() - t_pre, 3), "edges_in": int(prev_sig[0]),
-                       "pairs_out": int(obs_c.get["n"])}
-        prev_sig = (obs_c.get["n"], obs_c.get["h"])
-    iterations = 0
-    converged = False
-    rounds: list[dict] = []
-    for i in range(max_iters):
-        t_round = time.time()
-        iterations = i + 1
-        # ---- large-star(u): emit (v, m(u)) for strictly larger neighbors v>u
-        lg = _with_min(_nbrs(pairs)).filter(F.col("dst") > F.col("src"))
-        large = _canon(lg.select(F.col("dst").alias("a"), F.col("m").alias("b")), "a", "b")
-        # ---- small-star(u): emit (v, m(u)) for neighbors v≤u, plus (u, m(u))
-        sm = _with_min(_nbrs(large))
-        small_edges = sm.filter(F.col("dst") < F.col("src")).select(
-            F.col("dst").alias("a"), F.col("m").alias("b")
-        )
-        self_edges = sm.select(F.col("src").alias("a"), F.col("m").alias("b")).distinct()
-        small = _canon(small_edges.union(self_edges), "a", "b")
-        obs = Observation(f"star_{i}")
-        small = small.observe(obs, *_signature()).localCheckpoint(eager=True)
-        sig = (obs.get["n"], obs.get["h"])
-        pairs = small
-        rounds.append({"sec": round(time.time() - t_round, 3), "pairs": int(sig[0])})
-        if sig == prev_sig:
-            converged = True
-            break
-        prev_sig = sig
-    labels = (
-        nodes.join(
-            pairs.groupBy("u").agg(F.min("v").alias("lid")).withColumnRenamed("u", "nid"),
-            "nid",
-            "left",
-        ).select("nid", F.coalesce("lid", "nid").alias("lid"))
+    lg = _with_min(_nbrs(pairs)).filter(F.col("dst") > F.col("src"))
+    large = _canon(lg.select(F.col("dst").alias("a"), F.col("m").alias("b")), "a", "b")
+    sm = _with_min(_nbrs(large))
+    small_edges = sm.filter(F.col("dst") < F.col("src")).select(
+        F.col("dst").alias("a"), F.col("m").alias("b")
     )
-    return CCResult(labels=labels, iterations=iterations, converged=converged, path="star",
-                    rounds=rounds, contraction=contraction)
-
-
-def alternating_star(nodes: DataFrame, edges: DataFrame, max_iters: int = 50) -> CCResult:
-    """Large-star/small-star connected components (Kiveris et al. SoCC'14).
-
-    Maintains a parent forest as an edge list child→parent with parent<child.
-    Each round:
-
-      large-star: for every node u, connect every strictly-larger neighbor v
-                  to min(N(u) ∪ {u});
-      small-star: connect every parent-or-smaller neighbor to the minimum.
-
-    Converges when the edge set reaches a fixed point (every node points at
-    its component min). O(log²) rounds; each round is groupBy-min + join —
-    shuffle-friendly and skew-handled by AQE. Iterates on dense LONG ids
-    (``_with_long_ids``): label order during the loop is arbitrary, and the
-    final one-shot remap restores resolved_id = MIN(entity_key) string
-    semantics (sql/common/40:2).
-
-    A graph of at most ``_STAR_CONTRACT_MAX_EDGES`` canonical edges starts
-    the loop from a contracted forest: one ``mapInArrow`` task runs
-    ``_union_find_pairs`` over the whole edge list and emits (node,
-    component min) pairs — the same components, at most one pair per edge.
-    The forest's (count, hash) signature is observed on the checkpoint that
-    materializes it, so the first round reproduces its input and the loop
-    stops at iteration 1. Larger graphs run the loop on the canonical edges,
-    whose signature is observed the same way. ``CCResult.contraction``
-    records the pre-pass's edges in and pairs out (empty when it did not
-    run), ``CCResult.rounds`` each round's pair count."""
-    return _with_long_ids(_alternating_star_long, nodes, edges, max_iters=max_iters)
+    self_edges = sm.select(F.col("src").alias("a"), F.col("m").alias("b")).distinct()
+    obs = Observation(f"star_{i}")
+    small = (
+        _canon(small_edges.union(self_edges), "a", "b")
+        .observe(obs, *_signature())
+        .localCheckpoint(eager=True)
+    )
+    return small, (obs.get["n"], obs.get["h"])
 
 
 def _local_union_find(nodes: DataFrame, edges: DataFrame, max_edges: int) -> CCResult | None:
@@ -549,9 +533,9 @@ def _local_union_find(nodes: DataFrame, edges: DataFrame, max_edges: int) -> CCR
     ``max_edges`` (caller falls back to the distributed path).
 
     Exists for the INCR shape: a delta's impacted subgraph is delta-sized BY
-    DESIGN (thousands of edges), but a distributed hash-min loop still pays
-    O(diameter) scheduler round-trips — a ~10-15 s fixed floor that dwarfs the
-    actual work. Collecting ≤ max_edges edges over Arrow is a bounded,
+    DESIGN (thousands of edges), but the distributed pass still pays its id
+    mapping, edge build and union-find jobs — scheduler round-trips that
+    dwarf the actual work (a hash-min loop's floor was ~10-15 s). Collecting ≤ max_edges edges over Arrow is a bounded,
     metadata-scale transfer (500k edges ≈ ~40 MB of keys; factorize plus
     ``_union_find_pairs`` on 500k edges measures ~1.1 s) REGARDLESS of corpus
     size: at 10^12 turns the cap still holds because the subgraph tracks the
@@ -607,82 +591,32 @@ def connected_components(
     algorithm: str = "auto",
     max_iters: int = 30,
     edge_count_hint: int | None = None,
-    star_threshold: int = 100_000_000,
-    hash_min_budget: int = 8,
     local_max_edges: int = 0,
 ) -> CCResult:
-    """``auto`` (the production default) is a hybrid: graphs shaped like the
-    reference's anchor-star output converge under hash-min in ~6 rounds
-    (benchmark-results.md:35), so try that first within ``hash_min_budget``;
-    a graph whose diameter exceeds the budget (long merge chains) escalates
-    to large-star/small-star, whose round count is O(log²) regardless of
-    diameter. Above ``star_threshold`` edges skip the probe. The threshold
-    sits high because the probe is cheap AND never wasted: a hash-min round
-    is ~2 shuffles vs a star round's ~8 (measured 24.2 s vs 42.4 s to
-    convergence on the same 9.46M-edge graph, local[16]), and on escalation
-    the probe's partial labels contract the graph the star loop runs on.
+    """Label every node with the MIN entity_key of its component.
 
     ``local_max_edges > 0`` enables the bounded driver-side union-find fast
     path (see ``_local_union_find``). The pipeline passes it in BOTH modes
     (plans/pipeline.py run loop) — the gate is the MEASURED edge count, not
     the mode, mirroring AQE's size-adaptive planning: INCR subgraphs are
     delta-sized by design and usually qualify; a FULL graph qualifies only
-    when the whole corpus is tiny (corpus-scale graphs exceed the cap and
-    run distributed). ``CCResult.path`` records which path actually ran, and
-    the pipeline/bench surface it as ``cc_path`` so a timing is always
+    when the whole corpus is tiny.
+
+    Everything else runs distributed in one long-id pass (``_cc_long``): a
+    graph of at most ``_STAR_CONTRACT_MAX_EDGES`` canonical edges is
+    union-found in one task; a larger one takes the hash-min probe
+    (``algorithm="auto"``; ``"star"`` skips it) and then star rounds until
+    its pairs fit the same gate. The reference's labels are the component
+    minima, so every path publishes the same rows. ``max_iters`` is the
+    call's whole round budget, probe and star rounds and the contraction
+    alike. ``CCResult.path`` records which path ran ("local_union_find",
+    "contracted", "hash_min", "star", "hash_min+star"), and the
+    pipeline/bench surface it as ``cc_path`` so a timing is always
     attributable."""
+    if algorithm not in ("auto", "star"):
+        raise ValueError(f"connected_components: algorithm must be 'auto' or 'star', got {algorithm!r}")
     if local_max_edges > 0 and (edge_count_hint is None or edge_count_hint <= local_max_edges):
         local = _local_union_find(nodes, edges, local_max_edges)
         if local is not None:
             return local
-    if algorithm == "auto":
-        n = edge_count_hint if edge_count_hint is not None else edges.count()
-        if n > star_threshold:
-            algorithm = "star"
-        else:
-            probe = hash_min_lp(nodes, edges, max_iters=min(hash_min_budget, max_iters))
-            if probe.converged:
-                return probe
-            # the probe is never wasted: after k hash-min rounds every node
-            # carries the min key within k hops — a valid partial CONTRACTION.
-            # Escalate star on the contracted graph (nodes = partial labels,
-            # usually a small fraction of the original) and compose the maps.
-            # Correct because a component's min node always keeps label=self
-            # under hash-min, so representatives preserve the component min.
-            plabels = probe.labels  # (entity_key, label), already checkpointed
-            cedges = (
-                edges.join(
-                    plabels.withColumnRenamed("entity_key", "left_entity_key")
-                    .withColumnRenamed("label", "_ll"),
-                    "left_entity_key",
-                )
-                .join(
-                    plabels.withColumnRenamed("entity_key", "right_entity_key")
-                    .withColumnRenamed("label", "_rl"),
-                    "right_entity_key",
-                )
-                .filter(F.col("_ll") != F.col("_rl"))
-                .select(F.col("_ll").alias("left_entity_key"), F.col("_rl").alias("right_entity_key"))
-                .distinct()
-            )
-            cnodes = plabels.select(F.col("label").alias("entity_key")).distinct()
-            star = alternating_star(cnodes, cedges, max_iters=max(max_iters, 50))
-            final = (
-                plabels.join(
-                    star.labels.withColumnRenamed("label", "_final")
-                    .withColumnRenamed("entity_key", "label"),
-                    "label",
-                )
-                .select("entity_key", F.col("_final").alias("label"))
-            )
-            return CCResult(
-                labels=final,
-                iterations=probe.iterations + star.iterations,
-                converged=star.converged,
-                path="hash_min+star",
-                rounds=probe.rounds + star.rounds,
-                contraction=star.contraction,
-            )
-    if algorithm == "star":
-        return alternating_star(nodes, edges, max_iters=max(max_iters, 50))
-    return hash_min_lp(nodes, edges, max_iters=max_iters)
+    return _with_long_ids(nodes, edges, max_iters, probe=algorithm == "auto")

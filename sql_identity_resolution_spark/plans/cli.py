@@ -1,7 +1,7 @@
 """spark-submit entry point.
 
     spark-submit --py-files dist/idr.zip dist/idr_main.py \
-        --config pipeline.json --mode INCR [--dry-run] [--cc star]
+        --config pipeline.json --mode INCR [--dry-run]
 
 ≙ the reference's orchestrator invocations (``python sql/duckdb/core/idr_run.py
 --db=… --run-mode=FULL|INCR [--dry-run]``, idr_run.py:34-47). The config file
@@ -17,32 +17,40 @@ option, so a real file must be the application); in local mode plain
 from __future__ import annotations
 
 import argparse
+import dataclasses
 import json
 import sys
+import types
+import typing
 
-from sql_identity_resolution_spark.config import (
-    AttributeMapping,
-    EngineConfig,
-    Exclusion,
-    IdentifierMapping,
-    Rule,
-    SourceTable,
-    SourceTrust,
-)
+from sql_identity_resolution_spark.config import EngineConfig
 
 
-# every top-level key load_config reads; any other key is an error, so a
-# setting the engine no longer has cannot be silently ignored
-_CONFIG_KEYS = frozenset({
-    "warehouse", "transcript_sources", "sources", "rules", "mappings", "exclusions",
-    "attributes", "trust", "max_iters", "cc_algorithm", "emit_duplicate_text_pairs",
-})
+def _fits(value, hint) -> bool:
+    """``value`` (parsed JSON/YAML) has the annotated type ``hint``; a bool
+    is not an int."""
+    origin, args = typing.get_origin(hint), typing.get_args(hint)
+    if origin in (typing.Union, types.UnionType):
+        return any(_fits(value, a) for a in args)
+    if origin is list:
+        return isinstance(value, list) and all(_fits(v, args[0]) for v in value)
+    if origin is dict:
+        return isinstance(value, dict) and all(
+            _fits(k, args[0]) and _fits(v, args[1]) for k, v in value.items())
+    if hint is type(None):
+        return value is None
+    return isinstance(value, hint) and (hint is bool or not isinstance(value, bool))
 
 
 def load_config(path: str) -> EngineConfig:
     """JSON (or YAML when pyyaml is available) → EngineConfig.
     ≙ tools/load_metadata.py:9-13 loading metadata_samples/*.csv.
-    Raises ``ValueError`` naming any top-level key it does not read."""
+
+    Every ``EngineConfig`` field is a top-level key, plus
+    ``transcript_sources``. List fields build through their dataclasses;
+    every other value must have its field's annotated type. Raises
+    ``ValueError`` naming an unknown key (a typo or a setting the engine no
+    longer has fails loudly instead of being ignored) or a mistyped one."""
     with open(path) as f:
         text = f.read()
     try:
@@ -58,34 +66,34 @@ def load_config(path: str) -> EngineConfig:
             raise ValueError(f"{path}: neither valid JSON nor YAML: {e}") from e
     if not isinstance(doc, dict) or "warehouse" not in doc:
         raise ValueError(f"{path}: config must be a mapping with a 'warehouse' key")
-    unknown = sorted(set(doc) - _CONFIG_KEYS)
+    hints = typing.get_type_hints(EngineConfig)
+    known = {f.name for f in dataclasses.fields(EngineConfig)} | {"transcript_sources"}
+    unknown = sorted(set(doc) - known)
     if unknown:
-        raise ValueError(f"{path}: unknown config key(s) {unknown}; known: {sorted(_CONFIG_KEYS)}")
+        raise ValueError(f"{path}: unknown config key(s) {unknown}; known: {sorted(known)}")
 
-    def build(cls, rows):
-        return [cls(**r) for r in rows or []]
-
-    transcripts = doc.pop("transcript_sources", [])
-    cfg = EngineConfig(
-        warehouse=doc["warehouse"],
-        sources=build(SourceTable, doc.get("sources")),
-        rules=build(Rule, doc.get("rules")),
-        mappings=build(IdentifierMapping, doc.get("mappings")),
-        exclusions=build(Exclusion, doc.get("exclusions")),
-        attributes=build(AttributeMapping, doc.get("attributes")),
-        trust=build(SourceTrust, doc.get("trust")),
-        max_iters=doc.get("max_iters", 30),
-        cc_algorithm=doc.get("cc_algorithm", "auto"),
-    )
+    transcripts = doc.pop("transcript_sources", None) or []
+    kwargs = {}
+    for key, value in doc.items():
+        hint = hints[key]
+        item = typing.get_args(hint)[0] if typing.get_origin(hint) is list else None
+        if dataclasses.is_dataclass(item) and isinstance(value, list):
+            try:
+                kwargs[key] = [item(**r) for r in value]
+            except TypeError as e:
+                raise ValueError(f"{path}: config key {key!r}: {e}") from e
+        elif _fits(value, hint):
+            kwargs[key] = value
+        else:
+            raise ValueError(f"{path}: config key {key!r} must be {hint}, got {value!r}")
+    cfg = EngineConfig(**kwargs)
     # transcripts sources: {"table_id": ..., "path": ..., "lsh_threshold": ...}
     from sql_identity_resolution_spark.sources.transcripts import (
         transcripts_attributes,
         transcripts_source,
     )
 
-    if "emit_duplicate_text_pairs" in doc:
-        cfg.emit_duplicate_text_pairs = bool(doc["emit_duplicate_text_pairs"])
-    elif transcripts:
+    if transcripts and "emit_duplicate_text_pairs" not in doc:
         # transcripts wiring always ships R_FULL_TEXT_EXACT, which already
         # links identical texts — the linear dup pairs would be redundant
         cfg.emit_duplicate_text_pairs = False
@@ -105,7 +113,6 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--config", required=True, help="pipeline config JSON/YAML")
     ap.add_argument("--mode", default="FULL", choices=["FULL", "INCR"], help="run mode")
     ap.add_argument("--dry-run", action="store_true", help="compute diff, commit nothing")
-    ap.add_argument("--cc", default=None, choices=["auto", "hash_min", "star"], help="CC algorithm override")
     ap.add_argument("--master", default=None, help="spark master override (default: env/local)")
     args = ap.parse_args(argv)
 
@@ -113,8 +120,6 @@ def main(argv: list[str] | None = None) -> int:
     from sql_identity_resolution_spark.session import build_session
 
     cfg = load_config(args.config)
-    if args.cc:
-        cfg.cc_algorithm = args.cc
     spark = build_session(app_name="idr-run", master=args.master)
     res = IDRPipeline(spark, cfg).run(mode=args.mode, dry_run=args.dry_run)
     print(

@@ -128,10 +128,13 @@ class RunResult:
     lp_iterations: int = 0
     lp_converged: bool = True
     # which CC execution path labeled this run's subgraph (CCResult.path):
-    # "hash_min" / "star" / "hash_min+star" / "local_union_find" — lets a
-    # bench reader tell a distributed-LP timing from the driver fast path
+    # "local_union_find" / "contracted" / "hash_min" / "star" /
+    # "hash_min+star" — lets a bench reader tell a distributed-LP timing
+    # from the driver fast path
     cc_path: str = ""
-    # per-round {"sec", "delta"} decomposition of the distributed CC loop
+    # CCResult.rounds: one entry per distributed CC iteration, in order —
+    # hash-min {"sec", "delta"}, star {"sec", "pairs"}, one-task union-find
+    # {"sec", "edges_in", "pairs_out"}; empty on the driver path
     cc_rounds: list = field(default_factory=list)
     duration_seconds: float = 0.0
     stage_seconds: dict = field(default_factory=dict)
@@ -863,10 +866,8 @@ class IDRPipeline:
             cc = graph.connected_components(
                 nodes,
                 sub_edges,
-                algorithm=cfg.cc_algorithm,
                 max_iters=cfg.max_iters,
                 edge_count_hint=res.edges_created,
-                star_threshold=cfg.cc_star_threshold_edges,
                 # bounded driver union-find fast path under the cap — gated
                 # on the MEASURED edge count, not the mode: INCR subgraphs
                 # are delta-sized by design; a FULL graph qualifies only when
@@ -899,7 +900,7 @@ class IDRPipeline:
                 self._record_history(res, run_ts, stage_rows)
                 raise ConvergenceError(
                     f"run {run_id}: label propagation did not converge within "
-                    f"{cc.iterations} iterations (algorithm={cfg.cc_algorithm}, "
+                    f"{cc.iterations} iterations (path={cc.path}, "
                     f"max_iters={cfg.max_iters}); no membership was published"
                 )
             labels, n_labels = _ckpt_count(cc.labels, "labels")

@@ -211,9 +211,10 @@ def _cc_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     the mod groups EXCEED the cap and the graph shrinks toward empty), so
     when it fits the cap a driver union-find labels it without paying the
     distributed loop's per-round scheduler floors; above the cap the
-    large/small-star scale path runs exactly as before. Labels are identical
-    either way (resolved_id = MIN entity_key per component — the contract
-    both paths implement and the recursive-CTE oracle checks)."""
+    distributed path runs (a one-task union-find up to its own cap, rounds
+    beyond it). Labels are identical either way (resolved_id = MIN
+    entity_key per component — the contract every path implements and the
+    recursive-CTE oracle checks)."""
     key = (spark.sparkContext.applicationId, sf_dir)
     labels = _CC_LABELS_CACHE.get(key)
     if labels is None:
@@ -221,9 +222,7 @@ def _cc_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
         nodes = _customer(spark, sf_dir).select(
             F.concat(F.lit("cust:"), F.col("c_custkey").cast("string")).alias("entity_key")
         )
-        cc = connected_components(
-            nodes, edges, algorithm="star", max_iters=60, local_max_edges=500_000
-        )
+        cc = connected_components(nodes, edges, max_iters=60, local_max_edges=500_000)
         assert cc.converged, f"CC did not converge in {cc.iterations} rounds"
         labels = cc.labels.localCheckpoint(eager=True)
         _CC_LABELS_CACHE[key] = labels
@@ -234,8 +233,8 @@ def q_connected_components(spark, sf_dir):
     """§2.9 THE graph operator: connected components over the derived identity
     graph (all customers as nodes, incl. singletons). The ±500/±701 stepping
     makes ONE giant component of diameter ~hundreds — hash-min LP (O(diameter)
-    rounds) would need >500 iterations, so this runs the engine's scale path:
-    large-star/small-star (Kiveris et al.), O(log²) rounds.
+    rounds) would need >500 iterations; the engine's size gate labels it in
+    one union-find instead (operators/graph.py).
     Oracle: recursive-CTE reachability + MIN label in DuckDB."""
     return _cc_labels(spark, sf_dir).select(
         "entity_key", F.col("label").alias("resolved_id")

@@ -340,14 +340,49 @@ def test_streaming_epoch_replay_is_idempotent(spark, tmp_path):
 
 
 def test_load_config_rejects_unknown_keys(tmp_path):
-    """A config key the loader does not read (a typo, a removed setting, an
-    engine field the file cannot set) fails loudly instead of being ignored."""
+    """A config key the loader does not know (a typo, a removed setting)
+    fails loudly instead of being ignored."""
     from sql_identity_resolution_spark.plans.cli import load_config
 
     cfg_path = tmp_path / "cfg.json"
-    cfg_path.write_text(json.dumps({"warehouse": str(tmp_path / "wh"), "max_iter": 5, "cc_local_max_edges": 0}))
-    with pytest.raises(ValueError, match=r"unknown config key\(s\) \['cc_local_max_edges', 'max_iter'\]"):
+    cfg_path.write_text(json.dumps({"warehouse": str(tmp_path / "wh"), "max_iter": 5, "cc_algorithm": "auto"}))
+    with pytest.raises(ValueError, match=r"unknown config key\(s\) \['cc_algorithm', 'max_iter'\]"):
         load_config(str(cfg_path))
+
+
+def test_load_config_round_trips_every_scalar_field(tmp_path):
+    """Every scalar EngineConfig field can be set from the file and comes
+    back with the value written; a value of another type (a bool where an
+    int is due, a string where a bool is) raises naming the key."""
+    import dataclasses
+
+    from sql_identity_resolution_spark.config import EngineConfig
+    from sql_identity_resolution_spark.plans.cli import load_config
+
+    defaults = EngineConfig(warehouse="")
+    doc = {"warehouse": str(tmp_path / "wh")}
+    for f in dataclasses.fields(EngineConfig):
+        value = getattr(defaults, f.name)
+        if f.name == "warehouse" or isinstance(value, list):
+            continue
+        if isinstance(value, bool) or f.name == "score_dense":
+            doc[f.name] = not value
+        elif isinstance(value, int):
+            doc[f.name] = value + 7
+        elif f.name == "catalog_table_buckets":
+            doc[f.name] = {"identity_edges_current": 64}
+        else:
+            raise AssertionError(f"no test value for {f.name} = {value!r}")
+    cfg_path = tmp_path / "cfg.json"
+    cfg_path.write_text(json.dumps(doc))
+    cfg = load_config(str(cfg_path))
+    assert {k: getattr(cfg, k) for k in doc} == doc
+
+    for key, bad in (("max_iters", True), ("edge_merge_on_read", "yes"), ("catalog_buckets", 3.5),
+                     ("catalog_table_buckets", {"t": "64"})):
+        cfg_path.write_text(json.dumps({"warehouse": "wh", key: bad}))
+        with pytest.raises(ValueError, match=f"config key '{key}'"):
+            load_config(str(cfg_path))
 
 
 def test_example_pipeline_config_loads():
@@ -356,6 +391,6 @@ def test_example_pipeline_config_loads():
     from sql_identity_resolution_spark.plans.cli import load_config
 
     cfg = load_config(str(Path(__file__).resolve().parents[1] / "examples" / "pipeline.json"))
-    assert cfg.cc_algorithm == "auto" and cfg.max_iters == 30
+    assert cfg.max_iters == 30
     assert {s.table_id for s in cfg.sources} == {"crm", "chat"}
     assert {r.rule_id for r in cfg.rules} >= {"R_EMAIL_EXACT", "R_PHONE_EXACT", "R_LSH_TEXT"}

@@ -320,10 +320,13 @@ def test_lookback_late_data(spark, tmp_path):
 
 # 16. non-convergence HARD-FAILS: no membership published, status FAILED
 # (≙ sql/databricks/core/IDR_Run.py:493-494 raising on MAX_ITERS exhaustion)
-def test_nonconvergence_blocks_publish(spark, tmp_path):
+def test_nonconvergence_blocks_publish(spark, tmp_path, monkeypatch):
+    from sql_identity_resolution_spark.operators import graph
     from sql_identity_resolution_spark.plans.pipeline import ConvergenceError
 
-    # chain A–B (email) + B–C (phone): diameter 2, hash_min needs >1 iteration
+    # chain A–B (email) + B–C (phone): diameter 2, so with the one-task
+    # union-find gated off the distributed loop needs >1 iteration
+    monkeypatch.setattr(graph, "_STAR_CONTRACT_MAX_EDGES", 0)
     cfg = make_cfg(
         tmp_path,
         rows([
@@ -332,7 +335,6 @@ def test_nonconvergence_blocks_publish(spark, tmp_path):
             ("C001", "c@x.com", "222"),
         ]),
         max_iters=1,
-        cc_algorithm="hash_min",
         cc_local_max_edges=0,  # force the distributed loop so it CAN fail
     )
     pipe = IDRPipeline(spark, cfg)
@@ -399,7 +401,8 @@ def test_incremental_full_cluster_relabel(spark, tmp_path):
 # MEMBERSHIP (endpoints not co-clustered), not the edge store — an edge-store
 # anti-join would see the crashed run's edges as "already known" and strand
 # them unclustered forever.
-def test_incr_retry_reclusters_edges_merged_by_failed_run(spark, tmp_path):
+def test_incr_retry_reclusters_edges_merged_by_failed_run(spark, tmp_path, monkeypatch):
+    from sql_identity_resolution_spark.operators import graph
     from sql_identity_resolution_spark.plans.pipeline import ConvergenceError
 
     t1, t2 = datetime(2026, 1, 1), datetime(2026, 2, 1)
@@ -410,11 +413,13 @@ def test_incr_retry_reclusters_edges_merged_by_failed_run(spark, tmp_path):
     IDRPipeline(spark, cfg).run("FULL")
 
     # delta: B links to A (email), C links to B (phone) — diameter-2 chain,
-    # so hash_min with max_iters=1 fails AFTER the eager INCR edge merge
+    # so the distributed loop with max_iters=1 (the one-task union-find
+    # gated off) fails AFTER the eager INCR edge merge
     delta = base + [("B", "a@x.com", "222", t2), ("C", "c@x.com", "222", t2)]
     write_parquet(pd.DataFrame(rows(delta)), str(src))
+    monkeypatch.setattr(graph, "_STAR_CONTRACT_MAX_EDGES", 0)
     cfg_fail = make_cfg(
-        tmp_path, rows(delta), max_iters=1, cc_algorithm="hash_min",
+        tmp_path, rows(delta), max_iters=1,
         cc_local_max_edges=0,  # force the distributed loop so it CAN fail
     )
     pipe = IDRPipeline(spark, cfg_fail)

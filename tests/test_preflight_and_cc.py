@@ -115,58 +115,64 @@ def _chain(spark, n=12):
 
 
 def test_local_union_find_matches_distributed(spark):
-    """Bounded driver union-find must reproduce the distributed labels exactly
+    """Bounded driver union-find must reproduce the reference labels exactly
     (label = MIN entity_key per component), including isolated nodes."""
-    from sql_identity_resolution_spark.operators.graph import (
-        connected_components,
-        hash_min_lp,
-    )
+    from sql_identity_resolution_spark.operators.graph import connected_components
 
     nodes, edges = _chain(spark, 12)
     # add a disjoint triangle and an isolated singleton
     nodes = nodes.union(spark.createDataFrame([("t1",), ("t2",), ("t3",), ("zzz_alone",)], "entity_key string"))
+    triangle = [("t1", "t2"), ("t2", "t3"), ("t3", "t1")]
     edges = edges.union(
-        spark.createDataFrame(
-            [("t1", "t2"), ("t2", "t3"), ("t3", "t1")],
-            "left_entity_key string, right_entity_key string",
-        )
+        spark.createDataFrame(triangle, "left_entity_key string, right_entity_key string")
     )
-    dist = hash_min_lp(nodes, edges, max_iters=40)
+    ref = _dict_union_find([(f"e{i:03d}", f"e{i+1:03d}") for i in range(11)] + triangle)
     local = connected_components(nodes, edges, local_max_edges=1000)
-    assert local.converged and local.iterations == 1
-    want = {(r["entity_key"], r["label"]) for r in dist.labels.collect()}
+    assert local.converged and local.iterations == 1 and local.path == "local_union_find"
     got = {(r["entity_key"], r["label"]) for r in local.labels.collect()}
-    assert got == want
+    assert got == {(k, ref.get(k, k)) for k in (r["entity_key"] for r in nodes.collect())}
     assert ("zzz_alone", "zzz_alone") in got
 
 
 def test_local_union_find_cap_falls_back_to_distributed(spark):
     """A subgraph over the cap must take the distributed path (limit guard),
-    with identical labels."""
+    with identical labels: under the size gate, one union-find task."""
     from sql_identity_resolution_spark.operators.graph import connected_components
 
     nodes, edges = _chain(spark, 12)
     res = connected_components(nodes, edges, local_max_edges=3)  # 11 edges > 3
     assert res.converged
-    assert res.iterations > 1  # distributed rounds ran, not the 1-shot local path
+    assert res.path == "contracted" and res.iterations == 1
     got = {(r["entity_key"], r["label"]) for r in res.labels.collect()}
     assert got == {(f"e{i:03d}", "e000") for i in range(12)}
+
+
+def test_connected_components_rejects_unknown_algorithm():
+    """Only the probe (``auto``) and ``star`` remain selectable; a removed
+    algorithm name fails before any Spark work."""
+    from sql_identity_resolution_spark.operators.graph import connected_components
+
+    for algorithm in ("hash_min", "dense"):
+        with pytest.raises(ValueError, match="algorithm"):
+            connected_components(None, None, algorithm=algorithm)
 
 
 # ------------------------------------------------------------- frontier LP
 
 
-def test_frontier_matches_dense_hash_min(spark):
-    """Frontier (vertex-activation) hash-min, now the only hash-min form,
-    must produce the labels the dense form did — the MIN entity_key of each
-    component — on an adversarial mix (long chain + star + random pairs +
-    singletons), checked against the in-test dict union-find."""
+def test_frontier_matches_dense_hash_min(spark, monkeypatch):
+    """Frontier (vertex-activation) hash-min, the only hash-min form, must
+    produce the labels the dense form did — the MIN entity_key of each
+    component — on a mix of a short chain, a star, random pairs and
+    singletons, checked against the in-test dict union-find. With the
+    one-task union-find gated off, the ``auto`` probe converges on it."""
     import random
 
-    from sql_identity_resolution_spark.operators.graph import hash_min_lp
+    from sql_identity_resolution_spark.operators import graph
 
+    monkeypatch.setattr(graph, "_STAR_CONTRACT_MAX_EDGES", 0)
     rng = random.Random(7)
-    rows = [(f"c{i:03d}", f"c{i+1:03d}") for i in range(14)]           # chain
+    rows = [(f"c{i:03d}", f"c{i+1:03d}") for i in range(5)]            # chain
     rows += [("hub", f"s{i:02d}") for i in range(20)]                  # star
     rows += [(f"a{rng.randrange(30):02d}", f"a{rng.randrange(30):02d}") for _ in range(40)]
     rows = [(a, b) for a, b in rows if a != b]
@@ -174,12 +180,13 @@ def test_frontier_matches_dense_hash_min(spark):
     nodes = spark.createDataFrame([(k,) for k in keys], "entity_key string")
     edges = spark.createDataFrame(rows, "left_entity_key string, right_entity_key string")
     ref = _dict_union_find(rows)
-    front = hash_min_lp(nodes, edges, max_iters=40)
-    assert front.converged
+    front = graph.connected_components(nodes, edges)
+    assert front.converged and front.path == "hash_min"
     got = {(r["entity_key"], r["label"]) for r in front.labels.collect()}
     assert got == {(k, ref.get(k, k)) for k in keys}
     # per-round decomposition is recorded and the delta hits 0 at convergence
-    assert front.rounds and front.rounds[-1]["delta"] == 0
+    assert front.iterations == len(front.rounds) <= 8
+    assert front.rounds[-1]["delta"] == 0
     assert all(set(r) == {"sec", "delta"} for r in front.rounds)
 
 
@@ -245,18 +252,14 @@ def _adversarial_graph(spark, partitions):
 
 
 @pytest.mark.parametrize("partitions", [8, 1])
-def test_star_prepass_matches_local_union_find(spark, partitions):
-    """Hash-min, the contracted star loop and the driver union-find each
-    label an adversarial graph exactly as the in-test dict union-find does,
-    whether its edges are spread over 8 partitions or sit in one. Star and
-    the driver path share ``_union_find_pairs``, so neither is the other's
-    reference. The star pre-pass leaves a star forest either way, so its
-    loop converges at its first round."""
-    from sql_identity_resolution_spark.operators.graph import (
-        _local_union_find,
-        alternating_star,
-        hash_min_lp,
-    )
+def test_star_prepass_matches_local_union_find(spark, monkeypatch, partitions):
+    """The one-task union-find, the hash-min probe escalated to star, and
+    the driver union-find each label an adversarial graph exactly as the
+    in-test dict union-find does, whether its edges are spread over 8
+    partitions or sit in one. The distributed paths and the driver path
+    share ``_union_find_pairs``, so neither is the other's reference. Under
+    the size gate the contraction is the whole call: one iteration."""
+    from sql_identity_resolution_spark.operators import graph
 
     nodes, edges, canonical = _adversarial_graph(spark, partitions)
     ref = _dict_union_find(_adversarial_rows())
@@ -265,39 +268,72 @@ def test_star_prepass_matches_local_union_find(spark, partitions):
     assert ("éclair", "zeta") in want and ("\U0001F600", "\uffff") in want
 
     runs = {
-        "hash_min": hash_min_lp(nodes, edges, max_iters=80),
-        "star": alternating_star(nodes, edges, max_iters=40),
-        "local_union_find": _local_union_find(nodes, edges, 1000),
+        "contracted": graph.connected_components(nodes, edges),
+        "local_union_find": graph.connected_components(nodes, edges, local_max_edges=1000),
     }
+    monkeypatch.setattr(graph, "_STAR_CONTRACT_MAX_EDGES", 0)
+    # the 60-node chain outlasts the probe, which escalates to star
+    runs["hash_min+star"] = graph.connected_components(nodes, edges)
     for path, res in runs.items():
         assert res.converged and res.path == path, path
         assert {(r["entity_key"], r["label"]) for r in res.labels.collect()} == want, path
 
-    lp = runs["hash_min"]
-    # per-round decomposition is recorded and the delta hits 0 at convergence
-    assert lp.rounds and lp.rounds[-1]["delta"] == 0
-    assert all(set(r) == {"sec", "delta"} for r in lp.rounds)
-    star = runs["star"]
-    assert star.contraction["edges_in"] == len(canonical)
-    assert star.contraction["pairs_out"] <= star.contraction["edges_in"]
-    assert star.rounds and all(set(r) == {"sec", "pairs"} for r in star.rounds)
-    assert star.iterations == len(star.rounds) == 1
+    contracted = runs["contracted"]
+    assert contracted.iterations == len(contracted.rounds) == 1
+    (step,) = contracted.rounds
+    assert set(step) == {"sec", "edges_in", "pairs_out"}
+    assert step["edges_in"] == len(canonical)
     # a star forest: one pair per node that is not its component's min
-    assert star.contraction["pairs_out"] == len(want) - len({lbl for _, lbl in want})
+    assert step["pairs_out"] == len(want) - len({lbl for _, lbl in want})
+
+    escalated = runs["hash_min+star"]
+    assert escalated.iterations == len(escalated.rounds)
+    probe, star = escalated.rounds[:8], escalated.rounds[8:]
+    assert all(set(r) == {"sec", "delta"} for r in probe) and probe[-1]["delta"] > 0
+    assert star and all(set(r) == {"sec", "pairs"} for r in star)
 
 
 def test_star_above_contract_cap_skips_prepass(spark, monkeypatch):
-    """A graph above the pre-pass cap runs the star loop on its canonical
-    edges, with no pre-pass, and still converges to the component min."""
+    """A graph above the size gate runs the star loop on its canonical
+    edges, with no contraction, and still converges to the component min."""
     from sql_identity_resolution_spark.operators import graph
 
     monkeypatch.setattr(graph, "_STAR_CONTRACT_MAX_EDGES", 0)
     nodes, edges = _chain(spark, 3)
-    res = graph.alternating_star(nodes, edges, max_iters=40)
-    assert res.converged and res.contraction == {}
+    res = graph.connected_components(nodes, edges, algorithm="star", max_iters=40)
+    assert res.converged and res.path == "star"
     assert sorted((r["entity_key"], r["label"]) for r in res.labels.collect()) == [
         ("e000", "e000"), ("e001", "e000"), ("e002", "e000")]
     assert res.iterations == len(res.rounds) > 1
+    assert all(set(r) == {"sec", "pairs"} for r in res.rounds)
+
+
+def test_star_loop_ends_with_contraction_once_pairs_fit(spark, monkeypatch):
+    """Above the size gate the star loop checks the gate before every round:
+    once its pairs fit, one union-find task ends the loop instead of further
+    rounds relabeling a plateau. A 60-node chain plus a 12-node clique (125
+    canonical edges) over a gate of 100 takes one star round, then the
+    contraction."""
+    from itertools import combinations
+
+    from sql_identity_resolution_spark.operators import graph
+
+    rows = [(f"c{i:03d}", f"c{i+1:03d}") for i in range(59)]
+    rows += list(combinations([f"k{i:02d}" for i in range(12)], 2))
+    assert len(rows) == 125
+    keys = sorted({k for r in rows for k in r})
+    nodes = spark.createDataFrame([(k,) for k in keys], "entity_key string")
+    edges = spark.createDataFrame(rows, "left_entity_key string, right_entity_key string")
+    monkeypatch.setattr(graph, "_STAR_CONTRACT_MAX_EDGES", 100)
+    res = graph.connected_components(nodes, edges, algorithm="star", max_iters=60)
+    assert res.converged and res.path == "star"
+    assert res.iterations == len(res.rounds) == 2
+    star, contraction = res.rounds
+    assert set(star) == {"sec", "pairs"} and star["pairs"] <= 100
+    assert set(contraction) == {"sec", "edges_in", "pairs_out"}
+    assert contraction["edges_in"] == star["pairs"]
+    ref = _dict_union_find(rows)
+    assert {(r["entity_key"], r["label"]) for r in res.labels.collect()} == {(k, ref[k]) for k in keys}
 
 
 def test_local_union_find_collects_keep_job_group(spark):

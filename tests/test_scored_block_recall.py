@@ -8,7 +8,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from sql_identity_resolution_spark.operators import blocking, scoring
-from sql_identity_resolution_spark.operators.graph import hash_min_lp
+from sql_identity_resolution_spark.operators.graph import connected_components
 
 BK = ["identifier_type", "identifier_value_norm"]
 
@@ -48,7 +48,7 @@ def test_all_pairs_scores_non_anchor_pair_and_clusters_it(spark):
     assert edge_pairs == {("bbb", "ccc")}  # anchor pairs fail the threshold
 
     nodes = members.select("entity_key").distinct()
-    cc = hash_min_lp(nodes, edges.select("left_entity_key", "right_entity_key"))
+    cc = connected_components(nodes, edges.select("left_entity_key", "right_entity_key"))
     m = {r["entity_key"]: r["label"] for r in cc.labels.collect()}
     assert m["bbb"] == m["ccc"] == "bbb"  # B,C clustered despite dissimilar anchor
     assert m["aaa"] == "aaa"

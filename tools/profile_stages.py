@@ -47,8 +47,6 @@ def main(convs: int = 50_000, cpus: int = 16) -> None:
         )
         if os.environ.get("IDR_PROFILE_ALL_PAIRS_MAX"):
             cfg.scored_all_pairs_max = int(os.environ["IDR_PROFILE_ALL_PAIRS_MAX"])
-        if os.environ.get("IDR_PROFILE_STAR_THRESHOLD"):
-            cfg.cc_star_threshold_edges = int(os.environ["IDR_PROFILE_STAR_THRESHOLD"])
         if os.environ.get("IDR_PROFILE_NO_BROADCAST"):
             cfg.score_broadcast_max_entities = 0
         if os.environ.get("IDR_PROFILE_GROUPED"):
