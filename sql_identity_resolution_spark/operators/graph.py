@@ -48,7 +48,7 @@ class CCResult:
     # (one-task union-find) | "hash_min" (probe converged) | "star" |
     # "hash_min+star" (probe escalated); the star paths may end with the
     # contraction once their pairs fit the gate
-    path: str = "distributed"
+    path: str
     # one entry per iteration, in order — hash-min: {"sec", "delta": labels
     # changed}; star: {"sec", "pairs": forest pairs after the round};
     # contraction: {"sec", "edges_in", "pairs_out"} — the scaling
