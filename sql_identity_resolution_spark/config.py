@@ -161,10 +161,14 @@ class EngineConfig:
     attributes: list[AttributeMapping] = field(default_factory=list)
     trust: list[SourceTrust] = field(default_factory=list)
     # the round budget of the whole connected-components call: hash-min
-    # probe rounds, star rounds and the one-task union-find each count one
-    # (reference default MAX_ITERS, idr_run.py:37). RunResult.lp_iterations
-    # reports what a run used: 1 for the driver union-find or a contraction.
-    max_iters: int = 30
+    # probe rounds (at most 8), star rounds and the one-task union-find each
+    # count one. The reference's MAX_ITERS (idr_run.py:37) is 30 hash-min
+    # rounds alone; here, after a full probe, 60 leaves the star loop the 50
+    # rounds it was always granted when the probe's rounds were not counted
+    # (a config written for that meaning that still sets 30 leaves it 22).
+    # RunResult.lp_iterations reports what a run used: 1 for the driver
+    # union-find or a contraction.
+    max_iters: int = 60
     # Small-graph fast path: when the graph to cluster fits under this many
     # edges (a bounded, Arrow-batched collect — ~40 MB of keys at the
     # default, union-find ~1.1 s), run union-find on the driver instead of

@@ -17,8 +17,8 @@ routes, chosen by observed size alone:
   at 10M rows, docs/performance/benchmark-results.md:35). An unconverged
   probe contracts the pairs onto its partial labels, and large-star/
   small-star rounds (Kiveris et al., SoCC'14: O(log² n) rounds regardless
-  of diameter) run on them until the same size gate ends the loop with the
-  one-task union-find.
+  of diameter) run on them until the forest stops changing or the same
+  size gate ends the loop with the one-task union-find.
 
 The rounds are driver-controlled DataFrame loops with ``localCheckpoint()``
 to truncate lineage (the reference's table-swap per iteration,
@@ -44,10 +44,10 @@ class CCResult:
     converged: bool
     # which execution path produced the labels — surfaced as RunResult.cc_path
     # and in bench JSON so a reader can tell a distributed-LP timing from the
-    # bounded driver union-find fast path: "local_union_find" | "contracted"
-    # (one-task union-find) | "hash_min" (probe converged) | "star" |
-    # "hash_min+star" (probe escalated); the star paths may end with the
-    # contraction once their pairs fit the gate
+    # bounded driver union-find fast path: "local_union_find", or the
+    # distributed steps that ran, in order, joined by "+" — "hash_min"
+    # (probe rounds), "star" (star rounds), "contracted" (one-task
+    # union-find); e.g. "contracted", "hash_min", "hash_min+star+contracted"
     path: str
     # one entry per iteration, in order — hash-min: {"sec", "delta": labels
     # changed}; star: {"sec", "pairs": forest pairs after the round};
@@ -168,14 +168,14 @@ _CC_BROADCAST_MAX_NODES = 4_000_000
 # 4-32 partitions), so larger graphs run the rounds until they fit.
 _STAR_CONTRACT_MAX_EDGES = 1_000_000
 
-# hash-min rounds the `auto` probe may take before it escalates to star.
-# Reference-shaped (anchor-star) graphs above the gate converge well within
-# it: 2.375M edges in 5 rounds, 33.9-36.7 s, where the star loop took
-# 75-87 s (4 cores, local mode).
+# hash-min rounds the probe may take before it escalates to star. An
+# anchor-star graph (the reference's edge shape) converges in 3 of them at
+# 2.375M edges (tools/cc_anchor_star.py); no benchmark workload runs above
+# the gate yet, so how many rounds real traffic there needs is unmeasured.
 _PROBE_ROUNDS = 8
 
 
-def _with_long_ids(nodes: DataFrame, edges: DataFrame, max_iters: int, probe: bool) -> CCResult:
+def _with_long_ids(nodes: DataFrame, edges: DataFrame, max_iters: int) -> CCResult:
     """Label the graph on dense LONG node ids, then restore string semantics.
 
     Entity keys are ~17-40 byte strings; every CC round shuffles and
@@ -208,7 +208,7 @@ def _with_long_ids(nodes: DataFrame, edges: DataFrame, max_iters: int, probe: bo
         .join(rmap, "right_entity_key")
         .select(F.col("lid").alias("left_nid"), F.col("rid").alias("right_nid"))
     )
-    res = _cc_long(mapping.select("nid"), ledges, max_iters, probe)  # labels: (nid, lid)
+    res = _cc_long(mapping.select("nid"), ledges, max_iters)  # labels: (nid, lid)
     with_keys = res.labels.join(
         F.broadcast(mapping) if n_nodes <= _CC_BROADCAST_MAX_NODES else mapping, "nid"
     ).select("entity_key", "lid")
@@ -236,7 +236,7 @@ def _canon(df: DataFrame, a: str, b: str) -> DataFrame:
     )
 
 
-def _cc_long(nodes: DataFrame, edges: DataFrame, max_iters: int, probe: bool) -> CCResult:
+def _cc_long(nodes: DataFrame, edges: DataFrame, max_iters: int) -> CCResult:
     """The distributed CC driver on long ids: ``nodes`` (nid), ``edges``
     (left_nid, right_nid) → labels (nid, lid = component min nid).
 
@@ -247,8 +247,8 @@ def _cc_long(nodes: DataFrame, edges: DataFrame, max_iters: int, probe: bool) ->
 
     - a canonical pair list of at most ``_STAR_CONTRACT_MAX_EDGES`` is
       union-found in one task and the call ends there;
-    - otherwise (``probe``) up to ``_PROBE_ROUNDS`` hash-min rounds run on
-      ``und``; converged labels end the call;
+    - otherwise up to ``_PROBE_ROUNDS`` hash-min rounds run on ``und``;
+      converged labels end the call;
     - an unconverged probe contracts the pairs onto its partial labels, and
       large/small-star rounds run on them until the signature repeats or the
       pairs fit the gate.
@@ -260,7 +260,6 @@ def _cc_long(nodes: DataFrame, edges: DataFrame, max_iters: int, probe: bool) ->
     spark = nodes.sparkSession
     base = nodes.select("nid", F.col("nid").alias("lid"))
     rounds: list[dict] = []
-    path = "star"
     obs = Observation("cc_edges")
     e = edges.filter(F.col("left_nid") != F.col("right_nid"))
     # AQE is off while the edge list is built and the probe runs (restored
@@ -295,7 +294,7 @@ def _cc_long(nodes: DataFrame, edges: DataFrame, max_iters: int, probe: bool) ->
         # every undirected edge appears once per orientation; its canonical
         # (u > v) half is already distinct
         sig = (obs.get["n"] // 2, obs.get["h"])
-        if probe and sig[0] > _STAR_CONTRACT_MAX_EDGES:
+        if sig[0] > _STAR_CONTRACT_MAX_EDGES:
             base, rounds = _hash_min(nodes, und, min(_PROBE_ROUNDS, max_iters))
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
@@ -304,12 +303,11 @@ def _cc_long(nodes: DataFrame, edges: DataFrame, max_iters: int, probe: bool) ->
     if rounds:
         if not rounds[-1]["delta"]:
             return CCResult(labels=base, iterations=len(rounds), converged=True,
-                            path="hash_min", rounds=rounds)
+                            path=_path(rounds), rounds=rounds)
         # the probe is never wasted: after k rounds every node carries the
         # min id within k hops — a valid partial contraction. A component's
         # min keeps label = self, so the pairs between labels have the same
         # components, with the same minima, as the graph.
-        path = "hash_min+star"
         obs_p = Observation("cc_probe_pairs")
         lu = base.select(F.col("nid").alias("u"), F.col("lid").alias("lu"))
         lv = base.select(F.col("nid").alias("v"), F.col("lid").alias("lv"))
@@ -332,7 +330,6 @@ def _cc_long(nodes: DataFrame, edges: DataFrame, max_iters: int, probe: bool) ->
                 .observe(obs_c, F.count(F.lit(1)).alias("n"))
                 .localCheckpoint(eager=True)
             )
-            path = path if rounds else "contracted"
             rounds.append({"sec": round(time.time() - t_round, 3), "edges_in": int(sig[0]),
                            "pairs_out": int(obs_c.get["n"])})
             converged = True
@@ -345,8 +342,16 @@ def _cc_long(nodes: DataFrame, edges: DataFrame, max_iters: int, probe: bool) ->
         sig = nxt
     parents = pairs.groupBy(F.col("u").alias("lid")).agg(F.min("v").alias("root"))
     labels = base.join(parents, "lid", "left").select("nid", F.coalesce("root", "lid").alias("lid"))
-    return CCResult(labels=labels, iterations=len(rounds), converged=converged, path=path,
-                    rounds=rounds)
+    return CCResult(labels=labels, iterations=len(rounds), converged=converged,
+                    path=_path(rounds), rounds=rounds)
+
+
+def _path(rounds: list) -> str:
+    """``CCResult.path`` from the steps that ran, in the order they run:
+    "hash_min" (probe rounds), "star" (star rounds), "contracted" (the
+    one-task union-find), joined by "+"."""
+    steps = (("hash_min", "delta"), ("star", "pairs"), ("contracted", "edges_in"))
+    return "+".join(name for name, key in steps if any(key in r for r in rounds))
 
 
 def _hash_min(nodes: DataFrame, und: DataFrame, max_rounds: int) -> tuple[DataFrame, list]:
@@ -535,12 +540,13 @@ def _local_union_find(nodes: DataFrame, edges: DataFrame, max_edges: int) -> CCR
     Exists for the INCR shape: a delta's impacted subgraph is delta-sized BY
     DESIGN (thousands of edges), but the distributed pass still pays its id
     mapping, edge build and union-find jobs — scheduler round-trips that
-    dwarf the actual work (a hash-min loop's floor was ~10-15 s). Collecting ≤ max_edges edges over Arrow is a bounded,
-    metadata-scale transfer (500k edges ≈ ~40 MB of keys; factorize plus
-    ``_union_find_pairs`` on 500k edges measures ~1.1 s) REGARDLESS of corpus
-    size: at 10^12 turns the cap still holds because the subgraph tracks the
-    delta, not the corpus. The collects are limit-guarded so an unexpectedly
-    large subgraph (mass-merge delta) costs one truncated scan, never an OOM."""
+    dwarf the actual work. Collecting ≤ max_edges edges over Arrow is a
+    bounded, metadata-scale transfer (500k edges ≈ ~40 MB of keys;
+    factorize plus ``_union_find_pairs`` on 500k edges measures ~1.1 s)
+    REGARDLESS of corpus size: at 10^12 turns the cap still holds because
+    the subgraph tracks the delta, not the corpus. The collects are
+    limit-guarded so an unexpectedly large subgraph (mass-merge delta) costs
+    one truncated scan, never an OOM."""
     node_cap = 2 * max_edges + 10_000  # isolated singletons beyond endpoints
     # the two limit-guarded collects are independent jobs — overlap them from
     # a 2-thread pool so the node scan back-fills the edge job's tail (guide
@@ -589,7 +595,7 @@ def connected_components(
     nodes: DataFrame,
     edges: DataFrame,
     algorithm: str = "auto",
-    max_iters: int = 30,
+    max_iters: int = 60,
     edge_count_hint: int | None = None,
     local_max_edges: int = 0,
 ) -> CCResult:
@@ -604,19 +610,18 @@ def connected_components(
 
     Everything else runs distributed in one long-id pass (``_cc_long``): a
     graph of at most ``_STAR_CONTRACT_MAX_EDGES`` canonical edges is
-    union-found in one task; a larger one takes the hash-min probe
-    (``algorithm="auto"``; ``"star"`` skips it) and then star rounds until
-    its pairs fit the same gate. The reference's labels are the component
-    minima, so every path publishes the same rows. ``max_iters`` is the
-    call's whole round budget, probe and star rounds and the contraction
-    alike. ``CCResult.path`` records which path ran ("local_union_find",
-    "contracted", "hash_min", "star", "hash_min+star"), and the
-    pipeline/bench surface it as ``cc_path`` so a timing is always
-    attributable."""
+    union-found in one task; a larger one takes the hash-min probe and then
+    star rounds until its pairs fit the same gate. Observed size alone picks
+    the path: ``algorithm`` ("auto" or "star", for existing callers) changes
+    nothing. The reference's labels are the component minima, so every path
+    publishes the same rows. ``max_iters`` is the call's whole round budget,
+    probe and star rounds and the contraction alike. ``CCResult.path``
+    names the steps that ran, and the pipeline/bench surface it as
+    ``cc_path`` so a timing is always attributable."""
     if algorithm not in ("auto", "star"):
         raise ValueError(f"connected_components: algorithm must be 'auto' or 'star', got {algorithm!r}")
     if local_max_edges > 0 and (edge_count_hint is None or edge_count_hint <= local_max_edges):
         local = _local_union_find(nodes, edges, local_max_edges)
         if local is not None:
             return local
-    return _with_long_ids(nodes, edges, max_iters, probe=algorithm == "auto")
+    return _with_long_ids(nodes, edges, max_iters)

@@ -128,9 +128,9 @@ class RunResult:
     lp_iterations: int = 0
     lp_converged: bool = True
     # which CC execution path labeled this run's subgraph (CCResult.path):
-    # "local_union_find" / "contracted" / "hash_min" / "star" /
-    # "hash_min+star" — lets a bench reader tell a distributed-LP timing
-    # from the driver fast path
+    # "local_union_find", or the distributed steps that ran joined by "+"
+    # ("contracted", "hash_min", "hash_min+star+contracted", ...) — lets a
+    # bench reader tell a distributed-LP timing from the driver fast path
     cc_path: str = ""
     # CCResult.rounds: one entry per distributed CC iteration, in order —
     # hash-min {"sec", "delta"}, star {"sec", "pairs"}, one-task union-find

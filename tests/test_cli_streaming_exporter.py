@@ -391,6 +391,6 @@ def test_example_pipeline_config_loads():
     from sql_identity_resolution_spark.plans.cli import load_config
 
     cfg = load_config(str(Path(__file__).resolve().parents[1] / "examples" / "pipeline.json"))
-    assert cfg.max_iters == 30
+    assert cfg.max_iters == 60
     assert {s.table_id for s in cfg.sources} == {"crm", "chat"}
     assert {r.rule_id for r in cfg.rules} >= {"R_EMAIL_EXACT", "R_PHONE_EXACT", "R_LSH_TEXT"}

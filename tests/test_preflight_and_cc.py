@@ -148,8 +148,9 @@ def test_local_union_find_cap_falls_back_to_distributed(spark):
 
 
 def test_connected_components_rejects_unknown_algorithm():
-    """Only the probe (``auto``) and ``star`` remain selectable; a removed
-    algorithm name fails before any Spark work."""
+    """``auto`` and ``star`` are accepted for existing callers (observed size
+    alone picks the path); a removed algorithm name fails before any Spark
+    work."""
     from sql_identity_resolution_spark.operators.graph import connected_components
 
     for algorithm in ("hash_min", "dense"):
@@ -271,8 +272,12 @@ def test_star_prepass_matches_local_union_find(spark, monkeypatch, partitions):
         "contracted": graph.connected_components(nodes, edges),
         "local_union_find": graph.connected_components(nodes, edges, local_max_edges=1000),
     }
+    # the 60-node chain outlasts the probe; its contracted pairs (51 links
+    # between partial labels) fit a gate of 60, so no star round runs
+    monkeypatch.setattr(graph, "_STAR_CONTRACT_MAX_EDGES", 60)
+    runs["hash_min+contracted"] = graph.connected_components(nodes, edges)
+    # with no gate the probe escalates to star rounds to the fixed point
     monkeypatch.setattr(graph, "_STAR_CONTRACT_MAX_EDGES", 0)
-    # the 60-node chain outlasts the probe, which escalates to star
     runs["hash_min+star"] = graph.connected_components(nodes, edges)
     for path, res in runs.items():
         assert res.converged and res.path == path, path
@@ -286,6 +291,12 @@ def test_star_prepass_matches_local_union_find(spark, monkeypatch, partitions):
     # a star forest: one pair per node that is not its component's min
     assert step["pairs_out"] == len(want) - len({lbl for _, lbl in want})
 
+    probed = runs["hash_min+contracted"]
+    assert probed.iterations == len(probed.rounds) == 9
+    probe, (step,) = probed.rounds[:8], probed.rounds[8:]
+    assert all(set(r) == {"sec", "delta"} for r in probe) and probe[-1]["delta"] > 0
+    assert set(step) == {"sec", "edges_in", "pairs_out"} and step["edges_in"] <= 60
+
     escalated = runs["hash_min+star"]
     assert escalated.iterations == len(escalated.rounds)
     probe, star = escalated.rounds[:8], escalated.rounds[8:]
@@ -294,42 +305,50 @@ def test_star_prepass_matches_local_union_find(spark, monkeypatch, partitions):
 
 
 def test_star_above_contract_cap_skips_prepass(spark, monkeypatch):
-    """A graph above the size gate runs the star loop on its canonical
-    edges, with no contraction, and still converges to the component min."""
+    """Above the size gate a chain longer than the probe's 8 rounds escalates
+    to star rounds on the probe's contracted pairs; with the gate at 0 no
+    contraction runs, and the loop still converges to the component min."""
     from sql_identity_resolution_spark.operators import graph
 
     monkeypatch.setattr(graph, "_STAR_CONTRACT_MAX_EDGES", 0)
-    nodes, edges = _chain(spark, 3)
-    res = graph.connected_components(nodes, edges, algorithm="star", max_iters=40)
-    assert res.converged and res.path == "star"
-    assert sorted((r["entity_key"], r["label"]) for r in res.labels.collect()) == [
-        ("e000", "e000"), ("e001", "e000"), ("e002", "e000")]
-    assert res.iterations == len(res.rounds) > 1
-    assert all(set(r) == {"sec", "pairs"} for r in res.rounds)
+    nodes, edges = _chain(spark, 12)  # 11 hops
+    res = graph.connected_components(nodes, edges)
+    assert res.converged and res.path == "hash_min+star"
+    assert {(r["entity_key"], r["label"]) for r in res.labels.collect()} == {
+        (f"e{i:03d}", "e000") for i in range(12)}
+    assert res.iterations == len(res.rounds) > 8
+    probe, star = res.rounds[:8], res.rounds[8:]
+    assert all(set(r) == {"sec", "delta"} for r in probe) and probe[-1]["delta"] > 0
+    assert star and all(set(r) == {"sec", "pairs"} for r in star)
 
 
 def test_star_loop_ends_with_contraction_once_pairs_fit(spark, monkeypatch):
     """Above the size gate the star loop checks the gate before every round:
     once its pairs fit, one union-find task ends the loop instead of further
-    rounds relabeling a plateau. A 60-node chain plus a 12-node clique (125
-    canonical edges) over a gate of 100 takes one star round, then the
-    contraction."""
+    rounds relabeling a plateau. A chain of twelve 5-node cliques, each
+    joined to the next by 5 edges (175 canonical edges), outlasts the
+    probe; over a gate of 50 its contracted pairs take one star round, then
+    the contraction."""
     from itertools import combinations
 
     from sql_identity_resolution_spark.operators import graph
 
-    rows = [(f"c{i:03d}", f"c{i+1:03d}") for i in range(59)]
-    rows += list(combinations([f"k{i:02d}" for i in range(12)], 2))
-    assert len(rows) == 125
+    rows = []
+    for g in range(12):
+        rows += list(combinations([f"n{5 * g + i:03d}" for i in range(5)], 2))
+        if g:
+            rows += [(f"n{5 * g - 1 - j:03d}", f"n{5 * g + j:03d}") for j in range(5)]
+    assert len(rows) == 175
     keys = sorted({k for r in rows for k in r})
     nodes = spark.createDataFrame([(k,) for k in keys], "entity_key string")
     edges = spark.createDataFrame(rows, "left_entity_key string, right_entity_key string")
-    monkeypatch.setattr(graph, "_STAR_CONTRACT_MAX_EDGES", 100)
-    res = graph.connected_components(nodes, edges, algorithm="star", max_iters=60)
-    assert res.converged and res.path == "star"
-    assert res.iterations == len(res.rounds) == 2
-    star, contraction = res.rounds
-    assert set(star) == {"sec", "pairs"} and star["pairs"] <= 100
+    monkeypatch.setattr(graph, "_STAR_CONTRACT_MAX_EDGES", 50)
+    res = graph.connected_components(nodes, edges)
+    assert res.converged and res.path == "hash_min+star+contracted"
+    assert res.iterations == len(res.rounds) == 10
+    probe, (star, contraction) = res.rounds[:8], res.rounds[8:]
+    assert all(set(r) == {"sec", "delta"} for r in probe) and probe[-1]["delta"] > 0
+    assert set(star) == {"sec", "pairs"} and star["pairs"] <= 50
     assert set(contraction) == {"sec", "edges_in", "pairs_out"}
     assert contraction["edges_in"] == star["pairs"]
     ref = _dict_union_find(rows)
