@@ -397,8 +397,7 @@ def scaling_worker(turns_path: str, cpus: int) -> None:
         # twice (3.4 GB at 400k convs, measured round 4). See
         # config.score_broadcast_max_entities.
         scored_all_pairs_max=int(os.environ.get("SPARK_GRAFT_ALL_PAIRS_MAX", "64")),
-        # A/B knobs for scaling-campaign experiments (defaults = engine defaults)
-        score_dense=os.environ.get("SPARK_GRAFT_SCORE_DENSE", "0") != "0",
+        # A/B knob for scaling-campaign experiments (default = engine default)
         score_broadcast_max_entities=int(
             os.environ.get("SPARK_GRAFT_BCAST_MAX", "5000000")
         ),
@@ -440,7 +439,7 @@ def run_scaling() -> None:
     # software efficiency is measurable. Override: SPARK_GRAFT_SCALING_CPUS=8,32
     lo, hi = (int(x) for x in os.environ.get("SPARK_GRAFT_SCALING_CPUS", "4,16").split(","))
     # SPARK_GRAFT_CORPUS_DIR: reuse one pre-generated corpus across campaign
-    # variants (dense on/off, CC fusion k) so every A/B reads the IDENTICAL
+    # variants (broadcast gate, all-pairs cap) so every A/B reads the IDENTICAL
     # bytes — and the (unmeasured) generation cost is paid once.
     keep_dir = os.environ.get("SPARK_GRAFT_CORPUS_DIR")
     corpus_dir = keep_dir or tempfile.mkdtemp(prefix="idr_scaling_corpus_")

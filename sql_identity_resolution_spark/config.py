@@ -209,44 +209,15 @@ class EngineConfig:
     # pair. token_jaccard only (other scorers fall back to the classic path);
     # scores are bit-identical between the paths (shared _int_tokens rep).
     score_grouped: bool = False
-    # run the SCORED pipeline on dense long ids: entity keys and band-key
-    # strings are mapped to longs once (entity_side/block dims), every shuffle
-    # between candidate generation and edge shaping carries fixed-width ints,
-    # and strings are restored post-threshold/post-agg only. token_jaccard
-    # scorers only (others fall back to the classic string path); edges are
-    # identical to the classic path up to the deterministic choice of band
-    # provenance for multi-band pairs (MIN over 64-bit block ids instead of
-    # MIN over band-key strings). See operators/scoring.py dense section.
-    # DEFAULT OFF — measured round 4 at 400k conversations/local[32] on the
-    # same corpus: classic 227 s end-to-end vs dense 332-336 s. Once
-    # declared-unique sources skip the defensive text dedup, the classic
-    # path's text joins broadcast and its pair stream never re-exchanges, so
-    # the dense rewrite saves no bytes on the specified workload while paying
-    # an extra entity-side pass, id restores, and ~2x the GC. Turn it on when
-    # the entity side is too big to broadcast AND entity keys are long
-    # strings (the 10^9-entity shuffle-join regime it was built for).
-    # ROUND-5 UPDATE — default is now ADAPTIVE (None): under a real
-    # multi-process master (local-cluster / yarn / k8s / standalone), where
-    # shuffle blocks are genuinely serialized between JVMs, the dense path
-    # WON the interleaved A/B (best 163.5 s vs classic 182.1 s at
-    # 400k conversations on local-cluster[8,4]; edge stage 60.7 vs 77.7 s,
-    # identical edges — campaigns_r5/lc_dense_ab.json), while thread-mode
-    # local[N] (shared heap, shuffles are page-cache memcpys) still favors
-    # classic (round-4 A/B). None = dense iff the session master is not
-    # thread-local; True/False force it.
-    score_dense: bool | None = None
     # broadcast the tokenized entity-text side of the pair-scoring join when
     # the text store holds at most this many entities — the token arrays are
-    # the pipeline's biggest shuffle byte source; broadcasting keeps the pair
-    # stream map-side (dense path: dedup output never exchanges again — the
-    # forced shuffle-hash alternative exchanges the whole pair stream TWICE,
-    # the second time carrying a token array per row: 3.4 GB vs 0 measured at
-    # 400k conversations). Beyond the cap the shuffle-hash join runs (the
-    # 10^9-entity path). An earlier round-4 A/B measured broadcast LOSING at
-    # 400k — that was an artifact of the defensive per-entity text dedup
-    # being compiled into the broadcast build side (now skipped for sources
-    # declaring match_text_unique; the build is a flat projection of the
-    # checkpointed entity frame, ~150 B/entity of int tokens).
+    # the pipeline's biggest shuffle byte source, and broadcasting them keeps
+    # the deduped pair stream map-side (the shuffle-join alternative
+    # exchanges it twice, the second time carrying a token array per row).
+    # Beyond the cap the shuffle equi-join runs (the 10^9-entity path). The
+    # broadcast build is ~150 B/entity of int tokens for sources declaring
+    # match_text_unique; others pay the defensive per-entity text dedup
+    # inside it.
     score_broadcast_max_entities: int = 5_000_000
     # INCR edge MERGE strategy: merge-on-read appends a delta-sized update
     # part for matched buckets instead of rewriting them (≙ Iceberg

@@ -160,11 +160,9 @@ def split_by_group_size(
     return valid, skipped
 
 
-def _salted_join(
-    groups: DataFrame, members: DataFrame, salt_buckets: int, keys: list[str], member_salt_col: str
-) -> DataFrame:
-    """Physical salting with IDENTICAL output to the plain equi-join on
-    ``keys``: the group side is 1 row per block — replicating it across
+def _salted_block_join(groups: DataFrame, members: DataFrame, salt_buckets: int) -> DataFrame:
+    """Physical salting with IDENTICAL output to the plain equi-join on the
+    block key: the group side is 1 row per block — replicating it across
     ``salt_buckets`` synthetic sub-keys is free, while the (possibly hot)
     member side hashes into sub-keys, splitting a degenerate block across
     ``salt_buckets`` partitions. Explicit fallback for non-AQE deployments
@@ -174,14 +172,10 @@ def _salted_join(
             "_salt", F.explode(F.sequence(F.lit(0), F.lit(salt_buckets - 1)))
         )
         m = members.withColumn(
-            "_salt", F.pmod(F.xxhash64(member_salt_col), F.lit(salt_buckets)).cast("int")
+            "_salt", F.pmod(F.xxhash64("entity_key"), F.lit(salt_buckets)).cast("int")
         )
-        return g.join(m, [*keys, "_salt"], "inner").drop("_salt")
-    return groups.join(members, keys, "inner")
-
-
-def _salted_block_join(groups: DataFrame, members: DataFrame, salt_buckets: int) -> DataFrame:
-    return _salted_join(groups, members, salt_buckets, BLOCK_KEY, "entity_key")
+        return g.join(m, [*BLOCK_KEY, "_salt"], "inner").drop("_salt")
+    return groups.join(members, BLOCK_KEY, "inner")
 
 
 def anchor_edges(
@@ -278,111 +272,6 @@ def duplicate_text_pairs(entity_fp: DataFrame, delta_keys: DataFrame | None = No
             F.greatest("entity_key", "_rep").alias("right_entity_key"),
         )
     )
-
-
-# ---------------------------------------------------------------------------
-# Dense-long-id candidate generation (see operators/scoring.py dense section):
-# SCORED-path members are re-expressed as (eid:long, bkey:long) so every
-# downstream shuffle — the block self-join, band dedup, token joins — moves
-# fixed-width integers instead of string entity keys + band-key strings.
-
-
-def dedup_scored_members_dense(
-    members: DataFrame, entity_side: DataFrame, scored_types: list[str]
-) -> DataFrame:
-    """Dense analogue of :func:`dedup_scored_members`: one representative per
-    (block, identical-text fingerprint), returned as ``(eid, bkey)``. The
-    representative stays the MIN entity KEY of the group (string order, ≙ the
-    classic path) — the string participates in this one agg only; everything
-    downstream sees its long eid. NULL fingerprints (empty/NULL text) group
-    together per block exactly like the classic path."""
-    from sql_identity_resolution_spark.operators.scoring import block_key_expr
-
-    scored = members.filter(F.col("identifier_type").isin(scored_types))
-    mf = scored.withColumn("bkey", block_key_expr()).join(
-        entity_side.select("entity_key", "fp", "eid"), "entity_key", "inner"
-    )
-    return (
-        mf.groupBy("bkey", "fp")
-        .agg(F.min(F.struct("entity_key", "table_id", "eid")).alias("_r"))
-        .select(F.col("_r.eid").alias("eid"), "bkey")
-    )
-
-
-def members_dense(
-    members: DataFrame, entity_side: DataFrame, scored_types: list[str]
-) -> DataFrame:
-    """SCORED-path members as ``(eid, bkey)`` without identical-text dedup.
-    The inner join drops members with no entity-text row — the classic path
-    drops the same pairs at its inner text joins, just later."""
-    from sql_identity_resolution_spark.operators.scoring import block_key_expr
-
-    return (
-        members.filter(F.col("identifier_type").isin(scored_types))
-        .withColumn("bkey", block_key_expr())
-        .join(entity_side.select("entity_key", "eid"), "entity_key", "inner")
-        .select("eid", "bkey")
-    )
-
-
-def candidate_pairs_dense(
-    valid_groups: DataFrame,
-    members_e: DataFrame,
-    rid_map: DataFrame,
-    entity_side: DataFrame,
-    salt_buckets: int = 0,
-    all_pairs_max: int = 64,
-) -> DataFrame:
-    """Dense analogue of :func:`candidate_pairs`: same all-pairs-under-cap /
-    anchor-star-above-cap split, same recall, but the pair stream is
-    ``(rid:int, bkey:long, left_eid:long, right_eid:long)`` — 28 fixed-width
-    bytes per row through the widest shuffle in the pipeline.
-
-    Pair orientation is canonicalized on eid order (consistent within the
-    run); the final edge shaping re-canonicalizes on string order so the
-    published edges match the classic path's orientation exactly.
-
-    ``group_size`` still reflects PRE-dedup member counts (same contract as
-    the classic path: the all-pairs/star split is decided on the original
-    block size)."""
-    from sql_identity_resolution_spark.operators.scoring import block_key_expr
-
-    scored = (
-        valid_groups.filter((F.col("match_strategy") == "SCORED") & (F.col("group_size") >= 2))
-        .withColumn("bkey", block_key_expr())
-        .join(F.broadcast(rid_map.select("rid", "rule_id")), "rule_id", "inner")
-    )
-    m = members_e.select("eid", "bkey")
-
-    small = scored.filter(F.col("group_size") <= all_pairs_max)
-    a = _salted_join(small.select("rid", "bkey"), m, salt_buckets, ["bkey"], "eid").select(
-        "rid", "bkey", F.col("eid").alias("_a")
-    )
-    pairs_all = (
-        a.join(m.withColumnRenamed("eid", "_b"), ["bkey"], "inner")
-        .filter(F.col("_a") < F.col("_b"))
-        .select("rid", "bkey", F.col("_a").alias("left_eid"), F.col("_b").alias("right_eid"))
-    )
-
-    # star fallback: anchor key → eid via the (one-row-per-large-block) dim join
-    large = scored.filter(F.col("group_size") > all_pairs_max).join(
-        entity_side.select(
-            F.col("entity_key").alias("anchor_entity_key"), F.col("eid").alias("_anchor_eid")
-        ),
-        "anchor_entity_key",
-        "inner",
-    )
-    pairs_star = (
-        _salted_join(large.select("rid", "bkey", "_anchor_eid"), m, salt_buckets, ["bkey"], "eid")
-        .filter(F.col("eid") != F.col("_anchor_eid"))
-        .select(
-            "rid",
-            "bkey",
-            F.least("_anchor_eid", "eid").alias("left_eid"),
-            F.greatest("_anchor_eid", "eid").alias("right_eid"),
-        )
-    )
-    return pairs_all.unionByName(pairs_star)
 
 
 def candidate_pairs(

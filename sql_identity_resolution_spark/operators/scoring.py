@@ -14,7 +14,7 @@ histograms per block feed the per-partition lineage table.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from sql_identity_resolution_spark.functions.similarity import pair_scorer_udf
@@ -149,190 +149,6 @@ def score_candidate_pairs(
     for p in parts[1:]:
         out = out.unionByName(p)
     return out.drop("_lt", "_rt")
-
-
-# ---------------------------------------------------------------------------
-# Dense-long-id scoring path (the CC trick applied to pair scoring): every
-# shuffle between candidate generation and the final edge shaping carries only
-# fixed-width integers — (rid:int, left_eid:long, right_eid:long, bkey:long) —
-# instead of ~17-40 B string entity keys plus ~19 B band-key strings. Strings
-# are restored ONCE, post-threshold (edges) / post-aggregation (histogram),
-# via joins against the per-run entity/block dimensions. This was the one
-# stage measurably below its shuffle-bandwidth scaling ceiling; shuffle byte
-# width IS the ceiling, so narrowing the rows raises it directly.
-
-
-def block_key_expr():
-    """64-bit block id for a (identifier_type, identifier_value_norm) pair.
-    A collision (P ≈ n_blocks²/2^65) MERGES two blocks: extra candidate pairs
-    that scoring filters, plus min-struct provenance restore below — never a
-    lost pair, so recall is unaffected."""
-    return F.xxhash64("identifier_type", "identifier_value_norm")
-
-
-def build_entity_side(
-    entity_texts: DataFrame, text_col: str = "match_text", texts_unique: bool = False
-) -> DataFrame:
-    """One checkpointed pass over the entity-text table producing everything
-    the dense path needs per entity: ``(entity_key, eid, fp, _toks)``.
-
-    - ``eid``: dense long id from ``monotonically_increasing_id`` — NOT stable
-      across recomputation, which is exactly why this frame is eagerly
-      checkpointed once and every consumer (dedup, token joins, restore map)
-      reads the materialized ids.
-    - ``fp``: identical-text fingerprint (empty/NULL texts get NULL — empty
-      evidence never links entities).
-    - ``_toks``: the shared int32 token-set representation (``_int_tokens``),
-      computed once per ENTITY instead of attached per pair.
-
-    The groupBy makes the 1-row-per-entity contract explicit: duplicate
-    entity_key rows within a dirty source collapse deterministically to the
-    MAX text instead of fanning out one scored row per duplicate in the pair
-    joins. ``texts_unique`` (every contributing source declares
-    SourceTable.match_text_unique; cross-source collisions are impossible —
-    entity_key is table_id-prefixed) skips the defensive agg: it is a
-    corpus-wide sort-aggregate over full texts, measured as the hottest
-    avoidable node at 400k conversations."""
-    capped = F.substring(F.col(text_col), 1, SCORING_TEXT_MAX_CHARS)
-    if not texts_unique:
-        entity_texts = entity_texts.groupBy("entity_key").agg(F.max(text_col).alias(text_col))
-    return (
-        entity_texts.select(
-            "entity_key",
-            F.when(F.length(F.trim(F.col(text_col))) > 0, F.xxhash64(text_col)).alias("fp"),
-            _int_tokens(capped).alias("_toks"),
-        )
-        .withColumn("eid", F.monotonically_increasing_id())
-        .localCheckpoint(eager=True)
-    )
-
-
-def rid_map_df(spark: SparkSession, scored_rules) -> DataFrame:
-    """Tiny broadcast dimension mapping each SCORED rule to a dense int rid
-    (+ threshold). One identifier_type per rule (reference metadata contract,
-    sql/common/00_ddl_meta.sql:30-40), so type restores through it too."""
-    rows = [
-        (i, r.rule_id, r.identifier_type, float(r.threshold), r.scorer)
-        for i, r in enumerate(sorted(scored_rules, key=lambda r: r.rule_id))
-    ]
-    return spark.createDataFrame(
-        rows, "rid int, rule_id string, identifier_type string, threshold double, scorer string"
-    )
-
-
-def block_dim_df(scored_groups: DataFrame) -> DataFrame:
-    """(bkey, identifier_type, identifier_value_norm) — one row per scored
-    block, built from the (already tiny: one row per block) group table.
-    min-struct collapses hash collisions deterministically."""
-    return (
-        scored_groups.select(
-            block_key_expr().alias("bkey"), "identifier_type", "identifier_value_norm"
-        )
-        .groupBy("bkey")
-        .agg(F.min(F.struct("identifier_type", "identifier_value_norm")).alias("_b"))
-        .select("bkey", F.col("_b.identifier_type").alias("identifier_type"),
-                F.col("_b.identifier_value_norm").alias("identifier_value_norm"))
-    )
-
-
-def score_pairs_dense(
-    pairs_dense: DataFrame,
-    entity_side: DataFrame,
-    rid_map: DataFrame,
-    broadcast_toks: bool = False,
-) -> DataFrame:
-    """Dense analogue of :func:`score_candidate_pairs` for the token_jaccard
-    scorer. ``pairs_dense``: (rid, bkey, left_eid, right_eid), possibly
-    duplicated across bands. Returns (rid, left_eid, right_eid, bkey,
-    threshold, score) for UNIQUE pairs.
-
-    The dedup groupBy key is 20 fixed-width bytes; MIN(bkey) is the
-    deterministic band provenance (the classic path's MIN over band-key
-    STRINGS re-expressed on the 64-bit block id — a different but equally
-    deterministic representative when a pair appears in several bands).
-    Scores are bit-identical to the classic path: same ``_int_tokens``
-    representation, same |∩| arithmetic."""
-    uniq = pairs_dense.groupBy("rid", "left_eid", "right_eid").agg(F.min("bkey").alias("bkey"))
-    uniq = uniq.join(F.broadcast(rid_map.select("rid", "threshold")), "rid", "inner")
-    toks = entity_side.select("eid", "_toks")
-    lt = toks.select(F.col("eid").alias("left_eid"), F.col("_toks").alias("_lt"))
-    rt = toks.select(F.col("eid").alias("right_eid"), F.col("_toks").alias("_rt"))
-    if broadcast_toks:
-        lt, rt = F.broadcast(lt), F.broadcast(rt)
-    else:
-        # 8-byte equi-keys with a bounded build side: hash join beats the
-        # sort-merge default (no sort of the wide token side)
-        lt, rt = lt.hint("shuffle_hash"), rt.hint("shuffle_hash")
-    withtok = uniq.join(lt, "left_eid", "inner").join(rt, "right_eid", "inner")
-    inter = F.size(F.array_intersect("_lt", "_rt"))
-    denom = F.size("_lt") + F.size("_rt") - inter
-    score = F.when(denom == 0, F.lit(1.0)).otherwise(inter.cast("double") / denom.cast("double"))
-    return withtok.withColumn("score", score).drop("_lt", "_rt")
-
-
-def scored_edges_dense(
-    scored_dense: DataFrame,
-    entity_side: DataFrame,
-    block_dim: DataFrame,
-    rid_map: DataFrame,
-    run_ts,
-    broadcast_dims: bool = False,
-) -> DataFrame:
-    """Threshold-passing dense pairs → classic string edge rows. The three
-    restore joins run on the POST-threshold set (≪ candidate count); left and
-    right are re-canonicalized by STRING order so edge orientation matches
-    the classic path exactly.
-
-    ``broadcast_dims`` (same gate as the token joins): broadcast the id/block
-    dimensions so the passing-pair stream is never exchanged for the
-    restores; off, the 8-byte-key shuffle-hash joins are the 10^9-entity
-    path."""
-    id_map = entity_side.select("eid", "entity_key")
-    passing = scored_dense.filter(F.col("score") >= F.col("threshold"))
-    if broadcast_dims:
-        lk = F.broadcast(id_map.select(F.col("eid").alias("left_eid"), F.col("entity_key").alias("_lk")))
-        rk = F.broadcast(id_map.select(F.col("eid").alias("right_eid"), F.col("entity_key").alias("_rk")))
-        bd = F.broadcast(block_dim)
-    else:
-        lk = id_map.select(F.col("eid").alias("left_eid"), F.col("entity_key").alias("_lk")).hint("shuffle_hash")
-        rk = id_map.select(F.col("eid").alias("right_eid"), F.col("entity_key").alias("_rk")).hint("shuffle_hash")
-        bd = block_dim.hint("shuffle_hash")
-    restored = (
-        passing.join(lk, "left_eid", "inner")
-        .join(rk, "right_eid", "inner")
-        .join(bd, "bkey", "inner")
-        .join(F.broadcast(rid_map.select("rid", "rule_id")), "rid", "inner")
-    )
-    return restored.select(
-        "rule_id",
-        F.least("_lk", "_rk").alias("left_entity_key"),
-        F.greatest("_lk", "_rk").alias("right_entity_key"),
-        "identifier_type",
-        "identifier_value_norm",
-        F.lit(run_ts).cast("timestamp").alias("first_seen_ts"),
-        F.lit(run_ts).cast("timestamp").alias("last_seen_ts"),
-    )
-
-
-def score_histogram_dense(scored_dense: DataFrame, block_dim: DataFrame, buckets: int = 10) -> DataFrame:
-    """Dense analogue of :func:`score_histogram`: aggregate on the 8-byte
-    block id, restore the block strings on the (one-row-per-block) result."""
-    b = (
-        scored_dense.withColumn(
-            "bucket", F.least(F.lit(buckets - 1), F.floor(F.col("score") * buckets)).cast("int")
-        )
-        .groupBy("bkey", "bucket")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    agg = b.groupBy("bkey").agg(
-        F.sum("n").alias("pair_count"),
-        F.to_json(
-            F.map_from_entries(F.sort_array(F.collect_list(F.struct("bucket", "n"))))
-        ).alias("score_histogram"),
-    )
-    return agg.join(block_dim, "bkey", "inner").select(
-        "identifier_type", "identifier_value_norm", "pair_count", "score_histogram"
-    )
 
 
 def score_candidate_pairs_grouped(

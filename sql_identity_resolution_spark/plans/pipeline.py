@@ -76,14 +76,14 @@ _RUN_STATE_SCHEMA = (
 )
 
 
-def _dense_default_for_master(master: str) -> bool:
-    """Regime-adaptive dense-scoring default: dense long-id scoring won the
-    A/B only under real multi-JVM masters (serialized shuffle blocks);
-    thread-local masters — ``local``, ``local[N]``, ``local[*]``,
-    ``local[N,maxFailures]`` — share one heap and favor the classic path.
-    ``local-cluster[...]``/yarn/k8s/standalone count as multi-JVM."""
-    m = master or ""
-    return not (m == "local" or m.startswith("local["))
+def _text_fingerprints(texts: DataFrame) -> DataFrame:
+    """(entity_key, fp): fingerprint of the scoring payload. Empty/NULL texts
+    get a NULL fp and so stay unique — an empty-vs-empty pair is not evidence
+    of identity."""
+    return texts.select(
+        "entity_key",
+        F.when(F.length(F.trim(F.col("match_text"))) > 0, F.xxhash64("match_text")).alias("fp"),
+    )
 
 
 def _ckpt_count(df: DataFrame, name: str) -> tuple[DataFrame, int]:
@@ -535,7 +535,6 @@ class IDRPipeline:
 
             edges_exact = blocking.anchor_edges(valid, members, run_ts, salt_buckets=cfg.salt_buckets)
 
-            scored_pairs = None
             scored_hist = None  # (type, value, pair_count, score_histogram) for lineage
             has_scored = any(r.match_strategy == "SCORED" for r in cfg.active_rules())
             if has_scored:
@@ -575,14 +574,6 @@ class IDRPipeline:
                 else:
                     n_texts = (cat.row_count(T_ENTITY_TEXTS) or 0) + res.entities_processed
                 broadcast_texts = n_texts <= cfg.score_broadcast_max_entities
-                # score_dense=None → regime-adaptive: dense on real
-                # multi-JVM masters (serialized shuffle — the A/B winner
-                # there), classic on thread-local masters (shared heap)
-                score_dense = cfg.score_dense
-                if score_dense is None:
-                    score_dense = _dense_default_for_master(spark.sparkContext.master)
-                use_dense = score_dense and not cfg.score_grouped and set(scorer_names) <= {"token_jaccard"}
-                dup_scored = None
                 # INCR: only delta-impacted block members ever get scored, so
                 # tokenize/broadcast just THEIR texts (semi-join) — the
                 # scoring-side text build is ∝ impacted set, not corpus (it
@@ -615,117 +606,47 @@ class IDRPipeline:
                         .unionByName(texts_delta.select(*prior_slice.columns))
                         .join(member_keys, "entity_key", "leftsemi")
                     )
-                if use_dense:
-                    # ---- dense long-id path: fixed-width shuffles
-                    entity_side = scoring.build_entity_side(
-                        scoring_texts, texts_unique=self._texts_unique
+                scoring_members = members
+                if cfg.scored_dedup_identical_text:
+                    # member dedup only needs fingerprints for IMPACTED
+                    # members (inner join) — hash the scoped text set
+                    scoring_members = blocking.dedup_scored_members(
+                        members, _text_fingerprints(scoring_texts), scored_types
                     )
-                    if cfg.scored_dedup_identical_text:
-                        members_e = blocking.dedup_scored_members_dense(
-                            members, entity_side, scored_types
-                        )
-                    else:
-                        members_e = blocking.members_dense(members, entity_side, scored_types)
-                    # candidate generation joins members_e against itself (the
-                    # a-side and b-side of the block self-join): lazy
-                    # localCheckpoint = one evaluation of the member⋈entity
-                    # join + dedup agg, no extra action, and a leaf plan for
-                    # both references
-                    members_e = members_e.localCheckpoint(eager=False)
-                    rid_map = scoring.rid_map_df(spark, scored_rules)
-                    pairs_dense = blocking.candidate_pairs_dense(
-                        valid,
-                        members_e,
-                        rid_map,
-                        entity_side,
-                        salt_buckets=cfg.salt_buckets,
-                        all_pairs_max=cfg.scored_all_pairs_max,
-                    )
-                    scored_dense = scoring.score_pairs_dense(
-                        pairs_dense, entity_side, rid_map, broadcast_toks=broadcast_texts
-                    )
-                    scored_dense, res.candidate_pairs_scored = _ckpt_count(
-                        scored_dense, "scored_pairs"
-                    )
-                    block_dim = scoring.block_dim_df(
-                        valid.filter(F.col("match_strategy") == "SCORED")
-                    )
-                    scored_hist = scoring.score_histogram_dense(scored_dense, block_dim)
-                    edges_scored = scoring.scored_edges_dense(
-                        scored_dense, entity_side, block_dim, rid_map, run_ts,
-                        broadcast_dims=broadcast_texts,
-                    )
-                    # dup-pairs complement needs GLOBAL fingerprints (a delta
-                    # entity's identical-text representative may live outside
-                    # the impacted blocks for non-signature sources) — lazy
-                    # projection over the full text view, only materialized
-                    # when emit_duplicate_text_pairs is on; ≙ classic path
-                    entity_fp = texts.select(
-                        "entity_key",
-                        F.when(
-                            F.length(F.trim(F.col("match_text"))) > 0,
-                            F.xxhash64("match_text"),
-                        ).alias("fp"),
+                pairs = blocking.candidate_pairs(
+                    valid,
+                    scoring_members,
+                    salt_buckets=cfg.salt_buckets,
+                    all_pairs_max=cfg.scored_all_pairs_max,
+                )
+                if cfg.score_grouped and set(scorer_names) <= {"token_jaccard"}:
+                    scored_pairs = scoring.score_candidate_pairs_grouped(
+                        pairs, scoring_texts, rule_meta=rule_meta, texts_unique=self._texts_unique
                     )
                 else:
-                    # ---- classic string path: grouped cogroup or non-jaccard scorers
-                    scoring_members = members
-                    entity_fp = None
-                    if cfg.scored_dedup_identical_text:
-                        # scoring-payload fingerprint: empty texts stay unique
-                        # (an empty-vs-empty pair is not evidence of identity).
-                        # Member dedup only needs fingerprints for IMPACTED
-                        # members (inner join) — hash the scoped text set; the
-                        # dup-pairs complement below needs GLOBAL fingerprints
-                        # (a delta entity's representative may live outside
-                        # the impacted blocks) — that lazy projection is built
-                        # over the full view and only ever materialized when
-                        # emit_duplicate_text_pairs is on (≙ dense branch).
-                        def _fp(tdf):
-                            return tdf.select(
-                                "entity_key",
-                                F.when(
-                                    F.length(F.trim(F.col("match_text"))) > 0,
-                                    F.xxhash64("match_text"),
-                                ).alias("fp"),
-                            )
-
-                        entity_fp = _fp(texts)
-                        scoring_members = blocking.dedup_scored_members(
-                            members, _fp(scoring_texts), scored_types
-                        )
-                    pairs = blocking.candidate_pairs(
-                        valid,
-                        scoring_members,
-                        salt_buckets=cfg.salt_buckets,
-                        all_pairs_max=cfg.scored_all_pairs_max,
+                    scored_pairs = scoring.score_candidate_pairs(
+                        pairs,
+                        scoring_texts,
+                        scorers=scorer_names,
+                        rule_meta=rule_meta,
+                        broadcast_texts=broadcast_texts,
+                        texts_unique=self._texts_unique,
                     )
-                    if cfg.score_grouped and set(scorer_names) <= {"token_jaccard"}:
-                        scored_pairs = scoring.score_candidate_pairs_grouped(
-                            pairs, scoring_texts, rule_meta=rule_meta, texts_unique=self._texts_unique
-                        )
-                    else:
-                        scored_pairs = scoring.score_candidate_pairs(
-                            pairs,
-                            scoring_texts,
-                            scorers=scorer_names,
-                            rule_meta=rule_meta,
-                            broadcast_texts=broadcast_texts,
-                            texts_unique=self._texts_unique,
-                        )
-                    scored_pairs, res.candidate_pairs_scored = _ckpt_count(
-                        scored_pairs, "scored_pairs"
-                    )
-                    scored_hist = scoring.score_histogram(scored_pairs)
-                    edges_scored = scoring.scored_edges(scored_pairs, run_ts)
-                if cfg.scored_dedup_identical_text and cfg.emit_duplicate_text_pairs and entity_fp is not None:
+                scored_pairs, res.candidate_pairs_scored = _ckpt_count(
+                    scored_pairs, "scored_pairs"
+                )
+                scored_hist = scoring.score_histogram(scored_pairs)
+                edges_scored = scoring.scored_edges(scored_pairs, run_ts)
+                if cfg.scored_dedup_identical_text and cfg.emit_duplicate_text_pairs:
                     # linear complement of the dedup: every dropped duplicate
                     # links to its fingerprint group's representative with a
                     # pre-scored 1.0 pair (identical payload ⟹ score 1.0 —
-                    # skipping the scorer is exact, not an approximation)
+                    # skipping the scorer is exact, not an approximation).
+                    # GLOBAL fingerprints: a delta entity's representative
+                    # may live outside the impacted blocks.
                     dup_rule = min(scored_rules, key=lambda r: r.priority)
                     dup_scored = blocking.duplicate_text_pairs(
-                        entity_fp, delta_keys=entities_delta
+                        _text_fingerprints(texts), delta_keys=entities_delta
                     ).select(
                         F.lit(dup_rule.rule_id).alias("rule_id"),
                         "left_entity_key",

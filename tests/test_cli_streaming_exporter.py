@@ -345,8 +345,10 @@ def test_load_config_rejects_unknown_keys(tmp_path):
     from sql_identity_resolution_spark.plans.cli import load_config
 
     cfg_path = tmp_path / "cfg.json"
-    cfg_path.write_text(json.dumps({"warehouse": str(tmp_path / "wh"), "max_iter": 5, "cc_algorithm": "auto"}))
-    with pytest.raises(ValueError, match=r"unknown config key\(s\) \['cc_algorithm', 'max_iter'\]"):
+    cfg_path.write_text(json.dumps(
+        {"warehouse": str(tmp_path / "wh"), "max_iter": 5, "cc_algorithm": "auto", "score_dense": True}
+    ))
+    with pytest.raises(ValueError, match=r"unknown config key\(s\) \['cc_algorithm', 'max_iter', 'score_dense'\]"):
         load_config(str(cfg_path))
 
 
@@ -365,7 +367,7 @@ def test_load_config_round_trips_every_scalar_field(tmp_path):
         value = getattr(defaults, f.name)
         if f.name == "warehouse" or isinstance(value, list):
             continue
-        if isinstance(value, bool) or f.name == "score_dense":
+        if isinstance(value, bool):
             doc[f.name] = not value
         elif isinstance(value, int):
             doc[f.name] = value + 7

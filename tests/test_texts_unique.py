@@ -97,21 +97,6 @@ def test_grouped_texts_unique_parity(spark):
     assert _scores(fast) == _scores(base)
 
 
-def test_build_entity_side_texts_unique_parity(spark):
-    texts = spark.createDataFrame(
-        [("a", "x y z w"), ("b", ""), ("c", None)],
-        "entity_key string, match_text string",
-    )
-    def snap(df):
-        return {
-            r["entity_key"]: (r["fp"], tuple(r["_toks"]) if r["_toks"] is not None else None)
-            for r in df.collect()
-        }
-    assert snap(scoring.build_entity_side(texts, texts_unique=True)) == snap(
-        scoring.build_entity_side(texts, texts_unique=False)
-    )
-
-
 def test_pipeline_derives_flag_from_sources(spark):
     from sql_identity_resolution_spark import EngineConfig, IDRPipeline
     from sql_identity_resolution_spark.datagen import generate_transcripts, write_transcripts
