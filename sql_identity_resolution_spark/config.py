@@ -203,12 +203,6 @@ class EngineConfig:
     # star edges make these pairs redundant, and skipping them keeps the edge
     # table lean on dup-heavy corpora.
     emit_duplicate_text_pairs: bool = True
-    # score pairs per BLOCK via a cogroup(pairs, roster) pandas kernel
-    # instead of the classic attach-arrays-to-every-pair joins: an entity's
-    # token array ships once per block it has kept pairs in, not once per
-    # pair. token_jaccard only (other scorers fall back to the classic path);
-    # scores are bit-identical between the paths (shared _int_tokens rep).
-    score_grouped: bool = False
     # broadcast the tokenized entity-text side of the pair-scoring join when
     # the text store holds at most this many entities — the token arrays are
     # the pipeline's biggest shuffle byte source, and broadcasting them keeps

@@ -306,17 +306,16 @@ def candidate_pairs(
         (F.col("match_strategy") == "SCORED") & (F.col("group_size") >= 2)
     )
     m = members.select("entity_key", *BLOCK_KEY)
-    rule_cols = ["rule_id", "threshold", "scorer"]
 
     small = scored.filter(F.col("group_size") <= all_pairs_max)
-    a = _salted_block_join(small.select(*rule_cols, *BLOCK_KEY), m, salt_buckets).select(
-        *rule_cols, *BLOCK_KEY, F.col("entity_key").alias("_a")
+    a = _salted_block_join(small.select("rule_id", *BLOCK_KEY), m, salt_buckets).select(
+        "rule_id", *BLOCK_KEY, F.col("entity_key").alias("_a")
     )
     pairs_all = (
         a.join(m.withColumnRenamed("entity_key", "_b"), BLOCK_KEY, "inner")
         .filter(F.col("_a") < F.col("_b"))
         .select(
-            *rule_cols,
+            "rule_id",
             *BLOCK_KEY,
             F.col("_a").alias("left_entity_key"),
             F.col("_b").alias("right_entity_key"),
@@ -326,11 +325,11 @@ def candidate_pairs(
     large = scored.filter(F.col("group_size") > all_pairs_max)
     pairs_star = (
         _salted_block_join(
-            large.select(*rule_cols, *BLOCK_KEY, "anchor_entity_key"), m, salt_buckets
+            large.select("rule_id", *BLOCK_KEY, "anchor_entity_key"), m, salt_buckets
         )
         .filter(F.col("entity_key") != F.col("anchor_entity_key"))
         .select(
-            *rule_cols,
+            "rule_id",
             *BLOCK_KEY,
             F.least("anchor_entity_key", "entity_key").alias("left_entity_key"),
             F.greatest("anchor_entity_key", "entity_key").alias("right_entity_key"),

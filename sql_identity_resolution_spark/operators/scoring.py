@@ -2,14 +2,15 @@
 
 The reference's rules are all EXACT (a shared normalized value IS the match);
 this module is the additive fuzzy layer BASELINE.json mandates: LSH band keys
-produce *candidate* blocks, candidate pairs are scored in batched pandas UDFs,
-and only pairs ≥ rule.threshold become edges. Exact rules never pass through
-here (score ≙ 1.0 by construction).
+produce *candidate* blocks, candidate pairs are scored, and only pairs ≥
+rule.threshold become edges. Exact rules never pass through here (score ≙ 1.0
+by construction).
 
-Scale shape: pairs are deduped on (left,right) BEFORE fetching texts (a pair
-found by 6 bands is scored once); texts attach via two broadcast-or-shuffle
-equi-joins against the entity-text table; the UDF sees Arrow batches. Score
-histograms per block feed the per-partition lineage table.
+One scoring path: pairs are deduped on (left,right) BEFORE fetching texts (a
+pair found by 6 bands is scored once); token sets attach via two
+broadcast-or-shuffle equi-joins against the entity-text table; the default
+token_jaccard scorer is a JVM expression, other scorers are Arrow-batched
+pandas UDFs. Score histograms per block feed the per-partition lineage table.
 """
 
 from __future__ import annotations
@@ -27,15 +28,14 @@ SCORING_TEXT_MAX_CHARS = 1500  # shuffle bound: texts attach to EVERY candidate
 
 def _int_tokens(capped_text_col):
     """Distinct whitespace tokens hashed to int32 — the token-set
-    representation BOTH scoring paths share (bit-identical scores between
-    them). The default scorer compares token SETS — hash tokens to int32 on
-    the ENTITY side (one pass over entities) and ship compact arrays instead
-    of raw text: element width IS shuffle width, so 4-byte tokens halve it vs
-    int64 (31 usable bits — ANSI mode forbids the overflowing 64→32 cast, so
-    mask first). A truncation collision needs two distinct tokens of the SAME
-    pair to collide (~|L|·|R|/2^31 ≈ 3e-5 for transcript sizes) and then
-    shifts |∩| by 1 — orders of magnitude inside the threshold margin, and
-    deterministic across runs/parallelism."""
+    representation of the default token_jaccard scorer, which compares token
+    SETS: hash tokens on the ENTITY side (one pass over entities) and ship
+    compact arrays instead of raw text. Element width IS shuffle width, so
+    4-byte tokens halve it vs int64 (31 usable bits — ANSI mode forbids the
+    overflowing 64→32 cast, so mask first). A truncation collision needs two
+    distinct tokens of the SAME pair to collide (~|L|·|R|/2^31 ≈ 3e-5 for
+    transcript sizes) and then shifts |∩| by 1 — orders of magnitude inside
+    the threshold margin, and deterministic across runs/parallelism."""
     return F.array_distinct(
         F.transform(
             F.filter(F.split(capped_text_col, " "), lambda t: F.length(t) > 0),
@@ -47,24 +47,26 @@ def _int_tokens(capped_text_col):
 def score_candidate_pairs(
     pairs: DataFrame,
     entity_texts: DataFrame,
+    rule_meta: dict[str, tuple[float, str]],
     text_col: str = "match_text",
-    scorers: list[str] | None = None,
-    rule_meta: dict[str, tuple[float, str]] | None = None,
     broadcast_texts: bool = False,
     texts_unique: bool = False,
 ) -> DataFrame:
-    """pairs: (rule_id, threshold, scorer, identifier_type,
-    identifier_value_norm, left_entity_key, right_entity_key) — possibly with
-    duplicates across bands. Returns scored UNIQUE pairs with ``score``.
+    """pairs: (rule_id, identifier_type, identifier_value_norm,
+    left_entity_key, right_entity_key) — possibly with duplicates across
+    bands. Returns scored UNIQUE pairs with ``threshold``, ``scorer`` and
+    ``score``.
 
     Dedup keeps the lowest band's block key (deterministic MIN) so edge
     provenance is stable run-to-run.
 
-    ``rule_meta`` ({rule_id: (threshold, scorer)}): when given, the dedup
-    shuffle carries only (rule_id, keys, provenance) and threshold/scorer
-    re-attach AFTER dedup via a broadcast join — the band-duplicated pair
-    stream is the widest row-count shuffle in the pipeline, so dropping
-    constant-per-rule payload from it is a direct shuffle-byte cut.
+    ``rule_meta`` ({rule_id: (threshold, scorer)}): the dedup shuffle
+    carries only (rule_id, keys, provenance) and threshold/scorer attach
+    AFTER dedup via a broadcast join — the band-duplicated pair stream is
+    the widest row-count shuffle in the pipeline, so keeping constant-per-
+    rule payload out of it is a direct shuffle-byte cut. It also names the
+    scorers to run, one pass each (deriving them from the data would cost
+    a job).
 
     ``broadcast_texts``: hint the tokenized entity side into a broadcast
     join. The token arrays attached to every pair are the pipeline's biggest
@@ -72,36 +74,21 @@ def score_candidate_pairs(
     (caller decides — see EngineConfig.score_broadcast_max_entities) the pair
     stream never reshuffles at all. At 10^9+ entities leave it off and the
     classic shuffle equi-join runs instead."""
-    if rule_meta:
-        uniq = pairs.groupBy("rule_id", "left_entity_key", "right_entity_key").agg(
-            F.min("identifier_type").alias("identifier_type"),
-            F.min("identifier_value_norm").alias("identifier_value_norm"),
-        )
-        spark = pairs.sparkSession
-        meta_df = spark.createDataFrame(
-            [(rid, float(t), s) for rid, (t, s) in rule_meta.items()],
-            "rule_id string, threshold double, scorer string",
-        )
-        uniq = uniq.join(F.broadcast(meta_df), "rule_id", "inner")
-    else:
-        uniq = pairs.groupBy("rule_id", "left_entity_key", "right_entity_key").agg(
-            F.min("identifier_type").alias("identifier_type"),
-            F.min("identifier_value_norm").alias("identifier_value_norm"),
-            F.first("threshold").alias("threshold"),
-            F.first("scorer").alias("scorer"),
-        )
-    # one scorer invocation per scorer name; pass from rule metadata — deriving
-    # it from the data (distinct().collect()) would recompute the whole join
-    if scorers is None:
-        if rule_meta:
-            scorers = sorted({s for _, s in rule_meta.values()})
-        else:
-            scorers = [r["scorer"] for r in pairs.select("scorer").distinct().collect()]
+    uniq = pairs.groupBy("rule_id", "left_entity_key", "right_entity_key").agg(
+        F.min("identifier_type").alias("identifier_type"),
+        F.min("identifier_value_norm").alias("identifier_value_norm"),
+    )
+    meta_df = pairs.sparkSession.createDataFrame(
+        [(rid, float(t), s) for rid, (t, s) in rule_meta.items()],
+        "rule_id string, threshold double, scorer string",
+    )
+    uniq = uniq.join(F.broadcast(meta_df), "rule_id", "inner")
+    scorers = sorted({s for _, s in rule_meta.values()})
     jvm_only = set(scorers) <= {"token_jaccard"}
 
-    # explicit 1-row-per-entity contract (shared with the grouped path):
-    # duplicate entity rows would otherwise fan out one scored row per
-    # duplicate; collapse deterministically to the MAX text. Skipped when the
+    # explicit 1-row-per-entity contract: duplicate entity rows would
+    # otherwise fan out one scored row per duplicate; collapse
+    # deterministically to the MAX text. Skipped when the
     # caller proves uniqueness (every contributing source declares
     # SourceTable.match_text_unique): the defensive agg is a corpus-wide
     # sort-aggregate over FULL texts, built once per join side — the single
@@ -149,113 +136,6 @@ def score_candidate_pairs(
     for p in parts[1:]:
         out = out.unionByName(p)
     return out.drop("_lt", "_rt")
-
-
-def score_candidate_pairs_grouped(
-    pairs: DataFrame,
-    entity_texts: DataFrame,
-    text_col: str = "match_text",
-    rule_meta: dict[str, tuple[float, str]] | None = None,
-    texts_unique: bool = False,
-) -> DataFrame:
-    """Block-grouped variant of :func:`score_candidate_pairs` for the
-    token_jaccard scorer (falls back is the caller's job for other scorers).
-
-    The classic path attaches both token arrays to EVERY pair row via two
-    equi-joins — the second join reshuffles the pair stream already carrying
-    one array, so each entity's tokens cross the wire once per pair it
-    appears in. Here the deduped pairs are cogrouped with a per-block ROSTER
-    of (entity, tokens): an entity's array ships once per block it has kept
-    pairs in (within an all-pairs block of size k that serves up to k·(k−1)/2
-    pairs), and a vectorized per-block kernel computes |∩| over Python int
-    sets. Scores are BIT-IDENTICAL to the classic path: both paths share the
-    `_int_tokens` representation (same xxhash64&0x7FFFFFFF token ints), the
-    same pair-dedup (MIN block provenance), and the same inner-join semantics
-    (a pair with an entity absent from entity_texts is dropped).
-
-    At 10^9+ entities this is also the shape that survives: the cogroup
-    shuffles pairs (skinny) + roster (arrays once per block-incidence), both
-    partitioned by block key — never the pair×array product."""
-    import pandas as pd
-
-    spark = pairs.sparkSession
-    assert rule_meta, "grouped scoring requires rule_meta"
-    uniq = pairs.groupBy("rule_id", "left_entity_key", "right_entity_key").agg(
-        F.min("identifier_type").alias("identifier_type"),
-        F.min("identifier_value_norm").alias("identifier_value_norm"),
-    )
-    capped = F.substring(F.col(text_col), 1, SCORING_TEXT_MAX_CHARS)
-    # same 1-row-per-entity contract as the classic path (skipped when the
-    # caller proves per-source uniqueness); NULL token arrays (NULL/absent
-    # match_text) are dropped from the roster so their pairs are skipped in
-    # the kernel — the classic path emits a NULL score for them which the
-    # ≥threshold filter drops, so edges are identical either way
-    if not texts_unique:
-        entity_texts = entity_texts.groupBy("entity_key").agg(F.max(text_col).alias(text_col))
-    toks = entity_texts.select("entity_key", _int_tokens(capped).alias("_toks")).filter(
-        F.col("_toks").isNotNull()
-    )
-    # the roster derives FROM uniq — alias the group keys to fresh attributes
-    # so the cogroup isn't an ambiguous self-join. Blocks are logically keyed
-    # by (identifier_type, identifier_value_norm); cogrouping on BOTH keeps
-    # same-valued blocks of different types in separate pandas groups.
-    roster = (
-        uniq.select(
-            F.col("identifier_type").alias("block_type"),
-            F.col("identifier_value_norm").alias("block_key"),
-            F.col("left_entity_key").alias("entity_key"),
-        )
-        .unionByName(
-            uniq.select(
-                F.col("identifier_type").alias("block_type"),
-                F.col("identifier_value_norm").alias("block_key"),
-                F.col("right_entity_key").alias("entity_key"),
-            )
-        )
-        .distinct()
-        .join(toks, "entity_key", "inner")
-    )
-
-    out_schema = (
-        "rule_id string, left_entity_key string, right_entity_key string, "
-        "identifier_type string, identifier_value_norm string, score double"
-    )
-
-    def _score_block(key, pairs_pdf, roster_pdf):
-        tok = {e: frozenset(t) for e, t in zip(roster_pdf["entity_key"], roster_pdf["_toks"])}
-        rows = {c: [] for c in (
-            "rule_id", "left_entity_key", "right_entity_key",
-            "identifier_type", "identifier_value_norm", "score",
-        )}
-        for rid, l, r, ityp, ival in zip(
-            pairs_pdf["rule_id"], pairs_pdf["left_entity_key"], pairs_pdf["right_entity_key"],
-            pairs_pdf["identifier_type"], pairs_pdf["identifier_value_norm"],
-        ):
-            lt = tok.get(l)
-            rt = tok.get(r)
-            if lt is None or rt is None:  # ≙ classic path's INNER text joins
-                continue
-            inter = len(lt & rt)
-            denom = len(lt) + len(rt) - inter
-            score = 1.0 if denom == 0 else inter / denom
-            rows["rule_id"].append(rid)
-            rows["left_entity_key"].append(l)
-            rows["right_entity_key"].append(r)
-            rows["identifier_type"].append(ityp)
-            rows["identifier_value_norm"].append(ival)
-            rows["score"].append(score)
-        return pd.DataFrame(rows)
-
-    scored = (
-        uniq.groupby("identifier_type", "identifier_value_norm")
-        .cogroup(roster.groupby("block_type", "block_key"))
-        .applyInPandas(_score_block, schema=out_schema)
-    )
-    meta_df = spark.createDataFrame(
-        [(rid, float(t), s) for rid, (t, s) in rule_meta.items()],
-        "rule_id string, threshold double, scorer string",
-    )
-    return scored.join(F.broadcast(meta_df), "rule_id", "inner")
 
 
 def scored_edges(scored_pairs: DataFrame, run_ts) -> DataFrame:

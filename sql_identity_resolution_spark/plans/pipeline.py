@@ -556,7 +556,6 @@ class IDRPipeline:
                 )
                 scored_rules = [r for r in cfg.active_rules() if r.match_strategy == "SCORED"]
                 scored_types = [r.identifier_type for r in scored_rules]
-                scorer_names = sorted({r.scorer for r in scored_rules})
                 rule_meta = {r.rule_id: (float(r.threshold), r.scorer) for r in scored_rules}
                 # entity-count gate for broadcasting the tokenized entity side
                 # into the scoring join (the pair stream then never reshuffles
@@ -568,7 +567,7 @@ class IDRPipeline:
                 # exposes match_text AND one text row per entity (the
                 # transcripts signature source declares both via
                 # match_text_unique; undeclared sources get the defensive
-                # dedup agg inside the scoring builders instead).
+                # dedup agg inside score_candidate_pairs instead).
                 if mode == "FULL" or delta_is_full:
                     n_texts = res.entities_processed
                 else:
@@ -619,19 +618,13 @@ class IDRPipeline:
                     salt_buckets=cfg.salt_buckets,
                     all_pairs_max=cfg.scored_all_pairs_max,
                 )
-                if cfg.score_grouped and set(scorer_names) <= {"token_jaccard"}:
-                    scored_pairs = scoring.score_candidate_pairs_grouped(
-                        pairs, scoring_texts, rule_meta=rule_meta, texts_unique=self._texts_unique
-                    )
-                else:
-                    scored_pairs = scoring.score_candidate_pairs(
-                        pairs,
-                        scoring_texts,
-                        scorers=scorer_names,
-                        rule_meta=rule_meta,
-                        broadcast_texts=broadcast_texts,
-                        texts_unique=self._texts_unique,
-                    )
+                scored_pairs = scoring.score_candidate_pairs(
+                    pairs,
+                    scoring_texts,
+                    rule_meta,
+                    broadcast_texts=broadcast_texts,
+                    texts_unique=self._texts_unique,
+                )
                 scored_pairs, res.candidate_pairs_scored = _ckpt_count(
                     scored_pairs, "scored_pairs"
                 )

@@ -42,7 +42,7 @@ def test_all_pairs_scores_non_anchor_pair_and_clusters_it(spark):
     got = {(r["left_entity_key"], r["right_entity_key"]) for r in pairs.collect()}
     assert got == {("aaa", "bbb"), ("aaa", "ccc"), ("bbb", "ccc")}  # full within-block recall
 
-    scored = scoring.score_candidate_pairs(pairs, texts)
+    scored = scoring.score_candidate_pairs(pairs, texts, {"R_LSH": (0.6, "token_jaccard")})
     edges = scoring.scored_edges(scored, "2026-01-01 00:00:00")
     edge_pairs = {(r["left_entity_key"], r["right_entity_key"]) for r in edges.collect()}
     assert edge_pairs == {("bbb", "ccc")}  # anchor pairs fail the threshold

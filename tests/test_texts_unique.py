@@ -83,20 +83,6 @@ def test_classic_duplicate_texts_still_dedup_by_default(spark):
     assert _scores(scored) == _scores(expected)
 
 
-def test_grouped_texts_unique_parity(spark):
-    texts = spark.createDataFrame(
-        [("a", "x y z w"), ("b", "x y z q"), ("c", "x q r s")],
-        "entity_key string, match_text string",
-    )
-    base = scoring.score_candidate_pairs_grouped(
-        _pairs(spark), texts, rule_meta=RULE_META, texts_unique=False
-    )
-    fast = scoring.score_candidate_pairs_grouped(
-        _pairs(spark), texts, rule_meta=RULE_META, texts_unique=True
-    )
-    assert _scores(fast) == _scores(base)
-
-
 def test_pipeline_derives_flag_from_sources(spark):
     from sql_identity_resolution_spark import EngineConfig, IDRPipeline
     from sql_identity_resolution_spark.datagen import generate_transcripts, write_transcripts

@@ -49,8 +49,6 @@ def main(convs: int = 50_000, cpus: int = 16) -> None:
             cfg.scored_all_pairs_max = int(os.environ["IDR_PROFILE_ALL_PAIRS_MAX"])
         if os.environ.get("IDR_PROFILE_NO_BROADCAST"):
             cfg.score_broadcast_max_entities = 0
-        if os.environ.get("IDR_PROFILE_GROUPED"):
-            cfg.score_grouped = True
         if os.environ.get("IDR_PROFILE_CLUSTERED"):
             source, rules, mappings = transcripts_source("chat", turns_path, clustered=True)
             cfg.sources = [source]
