@@ -208,10 +208,12 @@ class EngineConfig:
     # the pipeline's biggest shuffle byte source, and broadcasting them keeps
     # the deduped pair stream map-side (the shuffle-join alternative
     # exchanges it twice, the second time carrying a token array per row).
-    # Beyond the cap the shuffle equi-join runs (the 10^9-entity path). The
-    # broadcast build is ~150 B/entity of int tokens for sources declaring
-    # match_text_unique; others pay the defensive per-entity text dedup
-    # inside it.
+    # Beyond the cap the join strategy is Spark's: AQE still broadcasts a
+    # text side under spark.sql.autoBroadcastJoinThreshold (64 MB, see
+    # session.py), so the shuffle equi-join runs for stores above both (the
+    # 10^9-entity path). The broadcast build is ~150 B/entity of int tokens
+    # for sources declaring match_text_unique; others pay the defensive
+    # per-entity text dedup inside it.
     score_broadcast_max_entities: int = 5_000_000
     # INCR edge MERGE strategy: merge-on-read appends a delta-sized update
     # part for matched buckets instead of rewriting them (≙ Iceberg
